@@ -9,59 +9,84 @@ O(log² n) rounds of pure join+groupBy, each round shrinking edges toward
 per-component stars centered on the component's minimum vertex id — which also
 satisfies the FIXTURES.md invariant that a component's id IS its min vertex id.
 
-Each round is two shuffles (one per star step); edge sets are deduplicated
-between rounds and lineage is truncated per round (localCheckpoint) so the
-driver loop stays flat.
+One round is one large star and one small star built from hash operators
+only (partial min aggregates, joins AQE may broadcast, one final hash
+aggregate) and runs as ONE Spark action: the round's parquet snapshot through
+``CheckpointManager.save``, with the convergence test observed on that write.
+The test is structural, so it cannot be fooled by a hash collision, and it
+usually spares the extra round that comparing two rounds' outputs needs: the
+output is final when every vertex the small star attaches had one smaller
+neighbor and has no vertex hanging below it. It is then a forest of stars on
+the component minima, which every later round leaves unchanged. Durable and
+ephemeral runs share the loop; only the directory and the manifest's
+partition lineage differ. The session's shuffle width is never changed — AQE
+coalesces the round shuffles.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pgs_spark.operators.state import snapshot as _snapshot
+from pgs_spark.operators.state import make_work_dir
+from pgs_spark.session import shuffle_bytes
+from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
 
 
-def _signature(e: DataFrame) -> tuple[int, int]:
-    """Order-insensitive edge-set signature (count, hash-sum) for the
-    convergence test — one cheap action instead of a subtract()."""
-    row = e.select(
-        F.count("*").alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
-    ).first()
-    return int(row["n"] or 0), int(row["h"] or 0)
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """For each u: connect strictly-larger neighbors to min(Γ(u) ∪ {u})."""
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large star then one small star over edges (u, v) → the next
+    round's distinct edges (u, v), every one with u > v, plus a flag
+    `unsettled`; when it is false on every row the result is final."""
+    # large star: for each u, connect its strictly-larger neighbors to
+    # m(u) = min(Γ(u) ∪ {u}). Output (k, v) has k > v by construction.
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    mins = mins.select("u", F.least("u", "mv").alias("m"))
-    return (
-        sym.join(mins, "u")
+    m = sym.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
+    large = (
+        sym.join(m, "u")
         .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .distinct()
+        .select(F.col("v").alias("k"), F.col("m").alias("v"))
     )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Orient edges toward the larger endpoint; connect all smaller neighbors
-    (and the larger endpoint itself) to the minimum."""
-    oriented = e.select(
-        F.greatest("u", "v").alias("k"), F.least("u", "v").alias("v")
+    # small star: per k, the min of its (smaller) neighbors and whether k is
+    # itself some edge's smaller end (a parent) — both from one aggregate over
+    # the edge ends, where the smaller end carries a null neighbor.
+    ends = large.select(
+        F.explode(
+            F.array(
+                F.struct("k", F.col("v").alias("d")),
+                F.struct(F.col("v").alias("k"), F.lit(None).cast("long").alias("d")),
+            )
+        ).alias("x")
+    ).select("x.*")
+    ms = ends.groupBy("k").agg(
+        F.min("d").alias("m"), F.max(F.col("d").isNull()).alias("parent")
     )
-    mins = oriented.groupBy("k").agg(F.min("v").alias("m"))
-    attach = (
-        oriented.join(mins, "k")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    # Connect each k and all its neighbors to that min; both pair kinds come
+    # from one projection, so the aggregate is computed once. A surviving
+    # neighbor pair (k had a second neighbor) or a pair (k, m) whose k is a
+    # parent marks the output unsettled.
+    pairs = large.join(ms, "k").select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("v").alias("u"), F.col("m").alias("v"),
+                    F.lit(True).alias("unsettled"),
+                ),
+                F.struct(
+                    F.col("k").alias("u"), F.col("m").alias("v"),
+                    F.col("parent").alias("unsettled"),
+                ),
+            )
+        ).alias("p")
+    )
+    return (
+        pairs.select("p.*")
         .filter(F.col("u") != F.col("v"))
+        .groupBy("u", "v")
+        .agg(F.max("unsettled").alias("unsettled"))
     )
-    centers = mins.select(F.col("k").alias("u"), F.col("m").alias("v"))
-    return attach.union(centers).distinct()
 
 
 @dataclass
@@ -75,7 +100,6 @@ def connected_components(
     spark: SparkSession,
     edges: DataFrame,
     max_iter: int = 50,
-    work_dir: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> ComponentsResult:
     """Edge table (src, dst), any orientation → (id, component).
@@ -86,124 +110,68 @@ def connected_components(
 
     `checkpoint_dir` makes the run DURABLE (the PageRank/LPA treatment): each
     round's star edge set is written with a manifest carrying the input
-    fingerprint, round signature, and per-partition lineage; a restarted call
-    with the same dir and input resumes from the newest round instead of
-    round 0 — a multi-hour CC at cluster scale survives a driver restart.
-    The convergence signature rides the checkpoint write via observe()."""
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    e = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-        .persist()
-    )
-    tmp = None
-    if work_dir is None and os.environ.get("PGS_CC_SPILL_STATE"):
-        work_dir = tmp = tempfile.mkdtemp(
-            prefix="pgs_cc_", dir=os.environ.get("PGS_SPARK_LOCAL_DIR") or None
-        )
-    cp = None
-    start_round = 0
-    sig = None
-    resumed_converged = False
-    if checkpoint_dir is not None:
-        from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
+    fingerprint, the round's record and converged flag, and per-partition
+    lineage; a restarted call with the same dir and input resumes from the
+    newest round instead of round 0 — a multi-hour CC at cluster scale
+    survives a driver restart.
 
-        cp = CheckpointManager(spark, checkpoint_dir, fingerprint_edges(edges))
+    `history` holds one record per round (`round`, `edges`, `seconds`,
+    `shuffle_write_bytes`, `shuffle_read_bytes`); a resumed run's first
+    record is the manifest of the round it resumed from."""
+    durable = checkpoint_dir is not None
+    cp = CheckpointManager(
+        spark,
+        checkpoint_dir if durable else make_work_dir("pgs_cc_"),
+        fingerprint_edges(edges) if durable else "",
+    )
+    e = edges.filter(F.col("src") != F.col("dst")).select(
+        F.col("src").alias("u"), F.col("dst").alias("v")
+    )
+    rounds, converged, history = 0, False, []
+    if durable:
         rp = cp.resume_point()
         if rp is None:
             cp.clear()  # stale state from a different input — never mix
         else:
-            start_round, e_cp, m = rp
-            e.unpersist()
-            e = e_cp
-            sig = (int(m.get("edges", 0)), int(m.get("sig_h", 0)))
-            resumed_converged = bool(m.get("converged", False))
-    if sig is None:
-        sig = _signature(e)
-    history = [{"round": start_round, "edges": sig[0]}]
-    rounds = start_round
-    # Round wall clock on small graphs is stage-scheduling latency, so size
-    # the round shuffles to the DATA (8 partitions at small |E|, the session
-    # default at cluster scale) — same recipe as coloring/merge_to_k.
-    default_p = spark.conf.get("spark.sql.shuffle.partitions")
-    round_p = max(8, min(int(default_p), sig[0] // 250_000 + 8))
-    # NOTE: this mutates the SESSION-global shuffle width for the duration of
-    # the loop (restored in finally). The iterative operators assume exclusive
-    # use of the SparkSession while they run — a concurrent query on the same
-    # session would be re-planned at round_p. Round state handed onward is
-    # materialized (checkpoint/snapshot) before the restore, so no lazy plan
-    # escapes with the narrow width.
-    spark.conf.set("spark.sql.shuffle.partitions", str(round_p))
-    try:
-        for rounds in range(start_round + 1, max_iter + 1):
-            if resumed_converged:
-                rounds = start_round
-                break
-            new_e = _small_star(_large_star(e))
-            if cp is not None:
-                # durable round state: signature rides the manifest write
-                obs = Observation()
-                observed = new_e.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-                )
-                holder = {}
+            rounds, e, m = rp
+            converged = bool(m.get("converged", False))
+            history.append({**m, "round": rounds})
 
-                def _mfn(obs=obs, holder=holder, prev_sig=sig):
-                    vals = obs.get
-                    holder["sig"] = (int(vals["n"] or 0), int(vals["h"] or 0))
-                    return {
-                        "edges": holder["sig"][0],
-                        "sig_h": holder["sig"][1],
-                        "converged": holder["sig"] == prev_sig,
-                    }
+    while not converged and rounds < max_iter:
+        rounds += 1
+        t0, sb0 = time.time(), shuffle_bytes(spark)
+        obs, rec = Observation(), {"round": rounds}
 
-                new_e = cp.save(observed, rounds, metrics_fn=_mfn, lineage=True)
-                cp.prune(keep_last=2)
-                new_sig = holder["sig"]
-            elif work_dir:
-                # off-heap round state (large graphs): the convergence
-                # signature rides the parquet WRITE job via observe() — one
-                # job per round instead of write + full re-read (the re-read
-                # is a whole extra pass over the edge set at cluster scale).
-                obs = Observation()
-                observed = new_e.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-                )
-                new_e = _snapshot(observed, work_dir, f"round_{rounds % 2}")
-                vals = obs.get
-                new_sig = (int(vals["n"] or 0), int(vals["h"] or 0))
-            else:
-                # lazy localCheckpoint: the signature action below
-                # materializes it — one job per round, lineage still
-                # truncated (small graphs). coalesce first: repeated
-                # checkpoint unions would otherwise accumulate partitions.
-                new_e = new_e.coalesce(round_p).localCheckpoint(eager=False)
-                new_sig = _signature(new_e)
-            e.unpersist()
-            e = new_e
-            history.append({"round": rounds, "edges": new_sig[0]})
-            if new_sig == sig:
-                break
-            sig = new_sig
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default_p)
+        def _record():
+            # runs right after the snapshot write, before the manifest
+            sb1 = shuffle_bytes(spark)
+            rec.update(
+                edges=int(obs.get["n"]),
+                seconds=time.time() - t0,
+                shuffle_write_bytes=sb1[0] - sb0[0],
+                shuffle_read_bytes=sb1[1] - sb0[1],
+            )
+            return {**rec, "converged": not obs.get["unsettled"]}
 
-    # Converged: e is a star forest (v → component-min). Roots and isolated
-    # vertices map to themselves.
-    comp = e.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))
-    out = (
-        verts.join(comp, "id", "left")
-        .select("id", F.coalesce("component", "id").alias("component"))
+        observed = _star_round(e).observe(
+            obs, F.count(F.lit(1)).alias("n"), F.max("unsettled").alias("unsettled")
+        ).select("u", "v")
+        e = cp.save(observed, rounds, metrics_fn=_record, lineage=durable)
+        cp.prune(keep_last=2)
+        history.append(rec)
+        converged = not obs.get["unsettled"]
+
+    # Converged, e is a star forest: every non-root vertex has exactly one
+    # edge, to its component's min, so (u, v) already is (id, component).
+    # A run cut short by max_iter may still list several parents; keep the min.
+    if not converged:
+        e = e.groupBy("u").agg(F.min("v").alias("v"))
+    verts = (
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
+        .distinct()
     )
-    verts.unpersist()
+    out = verts.join(
+        e.select(F.col("u").alias("id"), F.col("v").alias("component")), "id", "left"
+    ).select("id", F.coalesce("component", "id").alias("component"))
     return ComponentsResult(out, rounds, history)

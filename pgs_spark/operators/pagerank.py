@@ -263,12 +263,13 @@ def pagerank(
     d_mass = float(n_dangling) / n  # all ranks equal at iter 0 → analytic
     history: list[dict] = []
     durable = checkpoint_dir is not None
-    tmp_dir = None
     if not durable:
         from pgs_spark.operators.state import make_work_dir
 
-        checkpoint_dir = tmp_dir = make_work_dir("pgs_pr_")
-    cp = CheckpointManager(spark, checkpoint_dir, fingerprint_edges(edges))
+        checkpoint_dir = make_work_dir("pgs_pr_")
+    cp = CheckpointManager(
+        spark, checkpoint_dir, fingerprint_edges(edges) if durable else ""
+    )
     if durable:
         resumed = cp.resume_point()
         if resumed is None:

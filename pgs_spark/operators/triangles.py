@@ -49,10 +49,10 @@ def triangles(
     each triangle exactly once (x = wedge center).
 
     The oriented edge table is persisted (it feeds both wedge sides and the
-    closing semi-join). One-shot callers let the session reap it; ITERATIVE
-    callers (operators/truss.py peels per round) pass `ori_out` to receive
-    the persisted DataFrame and unpersist it once the round's result is
-    materialized — otherwise every round leaks a cached relation.
+    closing semi-join). Callers that materialize the result (`triangle_count`
+    after its count, operators/truss.py once per peel round) pass `ori_out`
+    to receive the persisted DataFrame and unpersist it afterwards —
+    otherwise every call leaks a cached relation.
 
     SCALE-ADAPTIVE WEDGE WIDTH (guide §2.2/§5): the wedge self-join emits
     Σ out-deg² rows — 10× the input at a FIXED partition count guarantees
@@ -122,7 +122,12 @@ def triangles(
 
 def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
     """Total number of triangles."""
-    return triangles(spark, edges).count()
+    ori: list = []
+    try:
+        return triangles(spark, edges, ori_out=ori).count()
+    finally:
+        for df in ori:
+            df.unpersist()
 
 
 def triangle_counts_per_vertex(spark: SparkSession, edges: DataFrame) -> DataFrame:

@@ -1,8 +1,11 @@
 """Connected components: known answers + union-find differential oracle."""
 
+import random
+
 import pytest
 
 from pgs_spark.operators.components import connected_components
+from pgs_spark.streaming.checkpoint import CheckpointManager
 from tests.conftest import PATH5, TWO_CLIQUES, edges_df
 from tests.oracles import random_graph, ref_components
 
@@ -39,12 +42,16 @@ def test_random_vs_union_find(spark, k):
 
 def test_rounds_logarithmic(spark):
     """A long path is the worst case for naive min-propagation (O(diameter));
-    alternating stars must finish in O(log n) rounds."""
+    alternating stars must finish in O(log n) rounds — both on the sorted
+    path and on one whose ids are shuffled, so min ids sit mid-path."""
     n = 256
-    path = [(i, i + 1) for i in range(n - 1)]
-    res = connected_components(spark, edges_df(spark, path))
-    assert _collect(res) == {i: 0 for i in range(n)}
-    assert res.rounds <= 12  # ~2·log2(256) + slack, NOT ~256
+    ids = list(range(n))
+    random.Random(20).shuffle(ids)
+    for order in (list(range(n)), ids):
+        path = [(order[i], order[i + 1]) for i in range(n - 1)]
+        res = connected_components(spark, edges_df(spark, path))
+        assert _collect(res) == {i: 0 for i in range(n)}
+        assert res.rounds <= 12  # ~2·log2(256) + slack, NOT ~256
 
 
 def test_checkpoint_resume_identical(spark, tmp_path):
@@ -82,3 +89,37 @@ def test_checkpoint_ignores_other_input(spark, tmp_path):
         spark, edges_df(spark, [(5, 6), (7, 8)]), checkpoint_dir=cp
     )
     assert _collect(other) == {5: 5, 6: 5, 7: 7, 8: 7}
+
+
+def test_crash_before_manifest_resumes(spark, tmp_path, monkeypatch):
+    """A driver dying after round 2's snapshot write but before its manifest
+    leaves an orphan state dir; the rerun must resume from round 1's manifest
+    and reach the same components as an uninterrupted run."""
+    pairs = random_graph(90, 0.03, seed=5)
+    cp = str(tmp_path / "cc_crash")
+    orig = CheckpointManager.write_manifest
+
+    def crash_at_2(self, iteration, *args, **kwargs):
+        if iteration == 2:
+            raise RuntimeError("injected crash before manifest 2")
+        return orig(self, iteration, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointManager, "write_manifest", crash_at_2)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        connected_components(spark, edges_df(spark, pairs), checkpoint_dir=cp)
+    monkeypatch.setattr(CheckpointManager, "write_manifest", orig)
+
+    resumed = connected_components(spark, edges_df(spark, pairs), checkpoint_dir=cp)
+    straight = connected_components(spark, edges_df(spark, pairs))
+    assert resumed.history[0]["round"] == 1
+    assert resumed.history[1]["round"] == 2
+    assert _collect(resumed) == _collect(straight) == ref_components(pairs)
+
+
+def test_history_one_record_per_round(spark):
+    res = connected_components(spark, edges_df(spark, random_graph(60, 0.05, seed=3)))
+    assert [h["round"] for h in res.history] == list(range(1, res.rounds + 1))
+    for h in res.history:
+        assert set(h) == {
+            "round", "edges", "seconds", "shuffle_write_bytes", "shuffle_read_bytes"
+        }
