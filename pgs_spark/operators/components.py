@@ -11,29 +11,25 @@ satisfies the FIXTURES.md invariant that a component's id IS its min vertex id.
 
 One round is one large star and one small star built from hash operators
 only (partial min aggregates, joins AQE may broadcast, one final hash
-aggregate) and runs as ONE Spark action: the round's parquet snapshot through
-``CheckpointManager.save``, with the convergence test observed on that write.
+aggregate) and runs as ONE Spark action: the round's parquet snapshot, taken
+by ``state.run_supersteps``, with the convergence test observed on that write.
 The test is structural, so it cannot be fooled by a hash collision, and it
 usually spares the extra round that comparing two rounds' outputs needs: the
 output is final when every vertex the small star attaches had one smaller
 neighbor and has no vertex hanging below it. It is then a forest of stars on
-the component minima, which every later round leaves unchanged. Durable and
-ephemeral runs share the loop; only the directory and the manifest's
-partition lineage differ. The session's shuffle width is never changed — AQE
-coalesces the round shuffles.
+the component minima, which every later round leaves unchanged. The
+session's shuffle width is never changed — AQE coalesces the round shuffles.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pgs_spark.operators.state import make_work_dir
-from pgs_spark.session import shuffle_bytes
-from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
+from pgs_spark.operators.state import run_supersteps
+from pgs_spark.streaming.checkpoint import fingerprint_edges
 
 
 def _star_round(e: DataFrame) -> DataFrame:
@@ -108,63 +104,32 @@ def connected_components(
     form). Isolated vertices never occur in an edge table; callers with a
     separate vertex set should left-join and coalesce(component, id).
 
-    `checkpoint_dir` makes the run DURABLE (the PageRank/LPA treatment): each
-    round's star edge set is written with a manifest carrying the input
-    fingerprint, the round's record and converged flag, and per-partition
-    lineage; a restarted call with the same dir and input resumes from the
-    newest round instead of round 0 — a multi-hour CC at cluster scale
-    survives a driver restart.
+    `checkpoint_dir` makes the run DURABLE (``state.run_supersteps``): a
+    restarted call with the same dir and input resumes from the newest
+    round — a multi-hour CC at cluster scale survives a driver restart.
 
     `history` holds one record per round (`round`, `edges`, `seconds`,
     `shuffle_write_bytes`, `shuffle_read_bytes`); a resumed run's first
     record is the manifest of the round it resumed from."""
-    durable = checkpoint_dir is not None
-    cp = CheckpointManager(
-        spark,
-        checkpoint_dir if durable else make_work_dir("pgs_cc_"),
-        fingerprint_edges(edges) if durable else "",
-    )
     e = edges.filter(F.col("src") != F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
-    rounds, converged, history = 0, False, []
-    if durable:
-        rp = cp.resume_point()
-        if rp is None:
-            cp.clear()  # stale state from a different input — never mix
-        else:
-            rounds, e, m = rp
-            converged = bool(m.get("converged", False))
-            history.append({**m, "round": rounds})
-
-    while not converged and rounds < max_iter:
-        rounds += 1
-        t0, sb0 = time.time(), shuffle_bytes(spark)
-        obs, rec = Observation(), {"round": rounds}
-
-        def _record():
-            # runs right after the snapshot write, before the manifest
-            sb1 = shuffle_bytes(spark)
-            rec.update(
-                edges=int(obs.get["n"]),
-                seconds=time.time() - t0,
-                shuffle_write_bytes=sb1[0] - sb0[0],
-                shuffle_read_bytes=sb1[1] - sb0[1],
-            )
-            return {**rec, "converged": not obs.get["unsettled"]}
-
-        observed = _star_round(e).observe(
-            obs, F.count(F.lit(1)).alias("n"), F.max("unsettled").alias("unsettled")
-        ).select("u", "v")
-        e = cp.save(observed, rounds, metrics_fn=_record, lineage=durable)
-        cp.prune(keep_last=2)
-        history.append(rec)
-        converged = not obs.get["unsettled"]
-
+    run = run_supersteps(
+        spark,
+        e,
+        lambda e, _: _star_round(e),
+        max_iter,
+        observe=[F.count(F.lit(1)).alias("edges"), F.max("unsettled").alias("_unsettled")],
+        done=lambda obs, _: not obs["_unsettled"],
+        key="round",
+        checkpoint_dir=checkpoint_dir,
+        fingerprint=lambda: fingerprint_edges(edges),
+    )
+    e = run.state
     # Converged, e is a star forest: every non-root vertex has exactly one
     # edge, to its component's min, so (u, v) already is (id, component).
     # A run cut short by max_iter may still list several parents; keep the min.
-    if not converged:
+    if not run.converged:
         e = e.groupBy("u").agg(F.min("v").alias("v"))
     verts = (
         edges.select(F.col("src").alias("id"))
@@ -174,4 +139,4 @@ def connected_components(
     out = verts.join(
         e.select(F.col("u").alias("id"), F.col("v").alias("component")), "id", "left"
     ).select("id", F.coalesce("component", "id").alias("component"))
-    return ComponentsResult(out, rounds, history)
+    return ComponentsResult(out, run.steps, run.history)

@@ -25,8 +25,8 @@ map-side partial max. Rounds are bounded by the DAG's critical-path depth
 (tens, even for web-scale import graphs — the condensation of a real
 dependency corpus is shallow). Levels are monotonically non-decreasing
 exact integers, so the fix-point test is a SUM(level) signature observed on
-the parquet snapshot WRITE job (components.py's one-job-per-round
-discipline); no floating point anywhere, so the DuckDB oracle
+the parquet snapshot WRITE job (``state.run_supersteps``, one job per
+round); no floating point anywhere, so the DuckDB oracle
 (plans/oracle_sql.build_order_sql: closure SCC -> recursive longest-path
 CTE) matches bit-exactly and convergence-independently.
 
@@ -40,10 +40,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pgs_spark.operators.state import make_work_dir, snapshot
+from pgs_spark.operators.state import run_supersteps
 
 
 @dataclass
@@ -96,50 +96,35 @@ def build_order(
     assignments = assignments.persist()
 
     ce = condensation_edges(edges, assignments).persist()
-    work_dir = make_work_dir("pgs_build_order_")
 
-    lvl = assignments.select(F.col("scc").alias("node")).distinct().withColumn(
-        "level", F.lit(0).cast("long")
-    )
-    lvl = snapshot(lvl, work_dir, "lvl_0")
-
-    history: list[dict] = []
-    prev_sum = -1
-    rounds = 0
-    converged = False
-    for rounds in range(1, max_rounds + 1):
+    def step(lvl: DataFrame, _: int) -> DataFrame:
         incoming = (
             ce.join(lvl.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg((F.max("level") + F.lit(1)).alias("inc"))
         )
-        new_lvl = (
-            lvl.join(incoming, "node", "left")
-            .select(
-                "node",
-                F.greatest(F.col("level"), F.coalesce("inc", F.lit(0))).alias(
-                    "level"
-                ),
-            )
+        return lvl.join(incoming, "node", "left").select(
+            "node",
+            F.greatest(F.col("level"), F.coalesce("inc", F.lit(0))).alias("level"),
         )
-        # SUM(level) is monotonically non-decreasing and bounded (exact
-        # integers), so an unchanged sum IS the fix point; the signature
-        # rides the snapshot write — one job per round.
-        obs = Observation()
-        observed = new_lvl.observe(obs, F.sum("level").alias("s"))
-        lvl = snapshot(observed, work_dir, f"lvl_{rounds % 2}")
-        cur_sum = int(obs.get["s"] or 0)
-        history.append({"round": rounds, "level_sum": cur_sum})
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
 
+    lvl0 = assignments.select(F.col("scc").alias("node")).distinct().withColumn(
+        "level", F.lit(0).cast("long")
+    )
+    run = run_supersteps(
+        spark,
+        lvl0,
+        step,
+        max_rounds,
+        observe=[F.sum("level").alias("level_sum")],
+        done=lambda obs, prev: prev is not None and obs["level_sum"] == prev["level_sum"],
+        key="round",
+        save_init=True,
+        persisted=[ce, assignments],
+    )
     out = assignments.join(
-        lvl.withColumnRenamed("node", "scc"), "scc"
+        run.state.withColumnRenamed("node", "scc"), "scc"
     ).select("id", "scc", "level")
-    ce.unpersist()
-    assignments.unpersist()
     return BuildOrderResult(
-        assignments=out, rounds=rounds, converged=converged, history=history
+        assignments=out, rounds=run.steps, converged=run.converged, history=run.history
     )

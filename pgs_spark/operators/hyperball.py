@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgs_spark.operators.edges import symmetrize
-from pgs_spark.operators.state import make_work_dir, snapshot
+from pgs_spark.operators.state import make_work_dir, run_supersteps, snapshot
 
 #: registers per sketch (m = 2^4); alpha_16 is the standard HLL bias constant
 M_REGISTERS = 16
@@ -69,6 +69,15 @@ def _init_registers(verts: DataFrame) -> DataFrame:
     )
 
 
+def _superstep(sym: DataFrame, state: DataFrame) -> DataFrame:
+    """One HyperBall superstep: every vertex takes the register-wise max of
+    its own and its neighbors' sketches."""
+    gathered = sym.join(state, sym.v == state.id).select(
+        F.col("u").alias("id"), "j", "rho"
+    )
+    return state.union(gathered).groupBy("id", "j").agg(F.max("rho").alias("rho"))
+
+
 def hyperball(
     spark: SparkSession,
     undirected_edges: DataFrame,
@@ -78,37 +87,23 @@ def hyperball(
     graph, 6dp-rounded (cross-engine exact — see module docstring).
 
     Per superstep: state ⋈ edges (gather neighbor registers) ∪ state →
-    groupBy(id, j).max(rho). State snapshots to parquet each round
-    (alternating names — flat lineage, off-heap, the state.py discipline)."""
+    groupBy(id, j).max(rho), snapshotted to parquet by
+    ``state.run_supersteps`` (flat lineage, off-heap)."""
     sym = (
         symmetrize(undirected_edges)
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .persist()
     )
     verts = sym.select(F.col("u").alias("id")).distinct()
-    work_dir = make_work_dir("pgs_hb_")
-    state = snapshot(_init_registers(verts), work_dir, "st_0")
-    for t in range(1, supersteps + 1):
-        gathered = sym.join(state, sym.v == state.id).select(
-            F.col("u").alias("id"), "j", "rho"
-        )
-        state = snapshot(
-            state.union(gathered).groupBy("id", "j").agg(F.max("rho").alias("rho")),
-            work_dir,
-            f"st_{t % 2}",
-        )
-    # S = (m − observed) · 2^0 + Σ 2^−rho — exact dyadic arithmetic; the
-    # 1/(1<<rho) form avoids libm pow() (exact IEEE divide by a power of two)
-    est = (
-        F.lit(ALPHA_16 * M_REGISTERS * M_REGISTERS)
-        / (
-            (F.lit(M_REGISTERS) - F.count("*")).cast("double")
-            + F.sum(F.lit(1.0) / F.expr("shiftleft(1, rho)").cast("double"))
-        )
-    )
-    out = state.groupBy("id").agg(F.round(est, 6).alias("est"))
-    sym.unpersist()
-    return out
+    state = run_supersteps(
+        spark,
+        _init_registers(verts),
+        lambda state, _: _superstep(sym, state),
+        supersteps,
+        save_init=True,
+        persisted=[sym],
+    ).state
+    return _raw_estimate(state).select("id", F.round("est", 6).alias("est"))
 
 
 def neighborhood_function(
@@ -126,6 +121,8 @@ def _raw_estimate(state: DataFrame) -> DataFrame:
     """(id, est) UNROUNDED raw-HLL estimate from a register relation —
     exact dyadic arithmetic (module docstring), so the value is bit-equal
     across engines before any rounding."""
+    # S = (m − observed) · 2^0 + Σ 2^−rho — exact dyadic arithmetic; the
+    # 1/(1<<rho) form avoids libm pow() (exact IEEE divide by a power of two)
     est = (
         F.lit(ALPHA_16 * M_REGISTERS * M_REGISTERS)
         / (
@@ -170,14 +167,7 @@ def harmonic_centrality(
     state = snapshot(_init_registers(verts), work_dir, "st_0")
     ests = [snapshot(_raw_estimate(state), work_dir, "est_0")]
     for t in range(1, supersteps + 1):
-        gathered = sym.join(state, sym.v == state.id).select(
-            F.col("u").alias("id"), "j", "rho"
-        )
-        state = snapshot(
-            state.union(gathered).groupBy("id", "j").agg(F.max("rho").alias("rho")),
-            work_dir,
-            f"st_{t % 2}",
-        )
+        state = snapshot(_superstep(sym, state), work_dir, f"st_{t % 2}")
         ests.append(snapshot(_raw_estimate(state), work_dir, f"est_{t}"))
     out = ests[0].select("id", F.col("est").alias("e0"))
     for t in range(1, supersteps + 1):
@@ -228,14 +218,7 @@ def effective_diameter(
     # discipline — est relations are |V| rows, cheap to keep)
     ests = [snapshot(_raw_estimate(state), work_dir, "est_0")]
     for t in range(1, supersteps + 1):
-        gathered = sym.join(state, sym.v == state.id).select(
-            F.col("u").alias("id"), "j", "rho"
-        )
-        state = snapshot(
-            state.union(gathered).groupBy("id", "j").agg(F.max("rho").alias("rho")),
-            work_dir,
-            f"st_{t % 2}",
-        )
+        state = snapshot(_superstep(sym, state), work_dir, f"st_{t % 2}")
         ests.append(snapshot(_raw_estimate(state), work_dir, f"est_{t}"))
     sums = [
         ests[t].agg(F.round(F.sum("est"), 6).alias(f"n{t}_r"))

@@ -13,24 +13,21 @@ the reference explicitly sorts before order-sensitive steps
 GeneticColoring stopping rule: iterate until conflict count is 0,
 commons/GeneticColoring.java:41-95), with a max-superstep guard.
 
-Superstep state (|V| label rows) snapshots to parquet via CheckpointManager —
-the same off-heap fix PageRank/CC got: localCheckpoint keeps every superstep's
-rows as deserialized on-heap RDD blocks that unpersist() cannot free; at 20M
-vertices that produced multi-second Full-GC pauses every superstep. With a
-durable ``checkpoint_dir`` the run also resumes mid-convergence (manifest
-carries iteration + changed-count; input fingerprint guards cross-input reuse).
+Superstep state (|V| label rows) runs on ``state.run_supersteps``: one
+parquet snapshot per superstep, the changed-count observed on that write,
+and with a durable ``checkpoint_dir`` a mid-convergence resume (the input
+fingerprint guards cross-input reuse).
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pgs_spark.operators.edges import symmetrize
-from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
+from pgs_spark.operators.state import run_supersteps
+from pgs_spark.streaming.checkpoint import fingerprint_edges
 
 
 @dataclass
@@ -61,14 +58,11 @@ def label_propagation(
     deterministic tie-break (max vote, then min label). Integer weights keep
     the vote exact cross-engine.
     """
-    if weight_col:
-        sym = undirected_edges.select("src", "dst", weight_col).union(
-            undirected_edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), weight_col
-            )
-        ).persist()
-    else:
-        sym = symmetrize(undirected_edges).persist()
+    cols = [weight_col] if weight_col else []
+    e = undirected_edges.select("src", "dst", *cols)
+    sym = e.union(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols)
+    ).persist()
     verts = sym.select(F.col("src").alias("id")).distinct()
     if seed is not None and n_initial_labels:
         labels = verts.select(
@@ -78,41 +72,12 @@ def label_propagation(
     else:
         labels = verts.select("id", F.col("id").alias("label"))
 
-    durable = checkpoint_dir is not None
-    if not durable:
-        from pgs_spark.operators.state import make_work_dir
+    vote = F.sum(weight_col) if weight_col else F.count("*")
 
-        checkpoint_dir = make_work_dir("pgs_lpa_")
-    cp = CheckpointManager(
-        spark, checkpoint_dir, fingerprint_edges(undirected_edges) if durable else ""
-    )
-    start_iter = 0
-    if durable:
-        resumed = cp.resume_point()
-        if resumed is None:
-            cp.clear()  # stale state from a different input — never mix
-        else:
-            start_iter, labels, m = resumed
-            if m.get("changed", 1) == 0:
-                sym.unpersist()
-                return LPAResult(labels.select("id", "label"), start_iter, True, [])
-    if start_iter == 0:
-        labels = cp.save(labels, 0, lineage=False)  # init state off-heap too
-
-    history: list[dict] = []
-    converged = False
-    iterations = start_iter
-    from pgs_spark.session import shuffle_bytes
-
-    for it in range(start_iter + 1, max_iter + 1):
-        t0 = time.time()
-        sb0 = shuffle_bytes(spark)
+    def step(labels: DataFrame, _: int) -> DataFrame:
         nbr = sym.join(labels, sym.dst == labels.id).select(
-            F.col("src").alias("id"),
-            "label",
-            *([weight_col] if weight_col else []),
+            F.col("src").alias("id"), "label", *cols
         )
-        vote = F.sum(weight_col) if weight_col else F.count("*")
         counts = nbr.groupBy("id", "label").agg(vote.alias("cnt"))
         # argmax by (cnt, -label): most frequent, ties to the smallest label.
         best = (
@@ -120,36 +85,26 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("s"))
             .select("id", (-F.col("s.nl")).alias("new_label"))
         )
-        # ONE job per superstep: the changed-count is observed on the snapshot
-        # write itself (the old label is already in-row — no second job, no
-        # snapshot re-read, no extra join).
-        pre = labels.join(best, "id", "left").select(
+        # the old label stays in-row, so the changed-count is observed on the
+        # snapshot write itself: no second job, no re-read, no extra join
+        return labels.join(best, "id", "left").select(
             "id",
             F.col("label").alias("old_label"),
             F.coalesce("new_label", "label").alias("label"),
         )
-        obs = Observation()
-        observed = pre.observe(
-            obs,
-            F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("changed"),
-        ).select("id", "label")
-        new_labels = cp.save(observed, it, lineage=False)
-        changed = int(obs.get["changed"] or 0)
-        labels = new_labels
-        iterations = it
-        sb1 = shuffle_bytes(spark)
-        m = {
-            "iteration": it,
-            "changed": changed,
-            "seconds": time.time() - t0,
-            "shuffle_write_bytes": sb1[0] - sb0[0],
-            "shuffle_read_bytes": sb1[1] - sb0[1],
-        }
-        history.append(m)
-        cp.write_manifest(it, m)
-        cp.prune(keep_last=2)
-        if changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    return LPAResult(labels.select("id", "label"), iterations, converged, history)
+
+    run = run_supersteps(
+        spark,
+        labels,
+        step,
+        max_iter,
+        observe=[
+            F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("changed")
+        ],
+        done=lambda obs, _: not obs["changed"],
+        checkpoint_dir=checkpoint_dir,
+        fingerprint=lambda: fingerprint_edges(undirected_edges),
+        save_init=True,  # the init labels off-heap too
+        persisted=[sym],
+    )
+    return LPAResult(run.state.select("id", "label"), run.steps, run.converged, run.history)

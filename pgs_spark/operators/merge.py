@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 from pgs_spark.operators.components import connected_components
 from pgs_spark.operators.edges import symmetrize
+from pgs_spark.operators.state import run_supersteps
+from pgs_spark.streaming.checkpoint import fingerprint_edges
 
 
 def _initial_labels(verts: DataFrame, n_classes: int, seed: int | None) -> DataFrame:
@@ -110,82 +112,43 @@ def kcore(
 ) -> DataFrame:
     """Iterative degree-< k peeling — the dangle-removal loop of
     FastPolygonizer (commons/FastPolygonizer.java:70-80 prunes degree-1
-    vertices until none remain). Fixed `rounds` keeps it oracle-unrollable;
-    ``rounds=None`` peels to the true k-core fixed point (edge-count
-    convergence test, one cheap action per round — the FastPolygonizer
+    vertices until none remain). Each round's edge count is observed on its
+    snapshot write, and a round that peels nothing stops the loop: the edge
+    set is then the fixed point, so a fixed `rounds` stays oracle-unrollable
+    and ``rounds=None`` peels to the true k-core (the FastPolygonizer
     until-none-remain semantics).
 
-    Per-round edge state snapshots to parquet (off-heap, alternating two
-    paths) — the same GC fix PageRank/CC got; localCheckpoint pinned every
-    round's |E| rows on-heap.
+    Per-round edge state runs on ``state.run_supersteps`` (off-heap parquet
+    snapshots — the same GC fix PageRank/CC got; localCheckpoint pinned
+    every round's |E| rows on-heap).
 
     `checkpoint_dir` makes the run DURABLE (the PageRank/CC treatment): each
     peel round's surviving edge set is written with a fingerprinted manifest
-    and a restarted call resumes mid-peel; the round's edge count rides the
-    checkpoint write via observe().
+    and a restarted call resumes mid-peel.
 
     Returns the surviving canonical edge set."""
-    from pgs_spark.operators.state import make_work_dir, snapshot
 
-    cp = None
-    start_round = 0
-    e = undirected_edges
-    converge = rounds is None
-    prev_n = e.count() if converge else None
-    if checkpoint_dir is not None:
-        from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
-
-        cp = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            f"{fingerprint_edges(undirected_edges)}|k={k}|rounds={rounds}",
-        )
-        rp = cp.resume_point()
-        if rp is None:
-            cp.clear()
-        else:
-            start_round, e, m = rp
-            if m.get("converged"):
-                return e
-            prev_n = int(m["edges"]) if converge else None
-    work_dir = None if cp is not None else make_work_dir("pgs_kcore_")
-    limit = 10_000 if converge else rounds  # |E| shrinks every live round
-    for r in range(start_round, limit):
+    def step(e: DataFrame, _: int) -> DataFrame:
         deg = (
             symmetrize(e).groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("id")
-        survived = (
-            e.join(keep.select(F.col("id").alias("src")), "src")
-            .join(keep.select(F.col("id").alias("dst")), "dst")
-            .select("src", "dst")
+        return e.join(keep.select(F.col("id").alias("src")), "src").join(
+            keep.select(F.col("id").alias("dst")), "dst"
         )
-        if cp is not None:
-            from pyspark.sql import Observation
 
-            obs = Observation()
-            observed = survived.observe(obs, F.count(F.lit(1)).alias("n"))
-            holder = {}
-
-            def _mfn(obs=obs, holder=holder, prev_n=prev_n):
-                n = int(obs.get["n"] or 0)
-                holder["n"] = n
-                return {"edges": n, "converged": converge and n == prev_n}
-
-            e = cp.save(observed, r + 1, metrics_fn=_mfn, lineage=False)
-            cp.prune(keep_last=2)
-            if converge:
-                if holder["n"] == prev_n:
-                    break
-                prev_n = holder["n"]
-            continue
-        e = snapshot(survived, work_dir, f"edges_{r % 2}")
-        if converge:
-            n = e.count()
-            if n == prev_n:
-                break
-            prev_n = n
-    return e
+    return run_supersteps(
+        spark,
+        undirected_edges.select("src", "dst"),
+        step,
+        rounds if rounds is not None else 10_000,  # |E| shrinks every live round
+        observe=[F.count(F.lit(1)).alias("edges")],
+        done=lambda obs, prev: prev is not None and obs["edges"] == prev["edges"],
+        checkpoint_dir=checkpoint_dir,
+        fingerprint=lambda: (
+            f"{fingerprint_edges(undirected_edges)}|k={k}|rounds={rounds}"
+        ),
+    ).state
 
 
 def score_peel(
@@ -205,12 +168,9 @@ def score_peel(
     Input must be canonical undirected (src, dst, weight). Returns the
     surviving weighted edge set. Same per-round shape as kcore: one
     map-side-combinable strength aggregation + two semi-joins; state
-    snapshots to parquet (off-heap, alternating names)."""
-    from pgs_spark.operators.state import make_work_dir, snapshot
+    snapshots to parquet through ``state.run_supersteps``."""
 
-    work_dir = make_work_dir("pgs_score_")
-    e = weighted_edges.select("src", "dst", F.col(weight_col).alias("weight"))
-    for r in range(rounds):
+    def step(e: DataFrame, _: int) -> DataFrame:
         sym_w = e.select(F.col("src").alias("id"), "weight").unionByName(
             e.select(F.col("dst").alias("id"), "weight")
         )
@@ -220,14 +180,12 @@ def score_peel(
             .filter(F.col("strength") >= s)
             .select("id")
         )
-        e = snapshot(
-            e.join(keep.withColumnRenamed("id", "src"), "src", "left_semi").join(
-                keep.withColumnRenamed("id", "dst"), "dst", "left_semi"
-            ).select("src", "dst", "weight"),
-            work_dir,
-            f"e_{r % 2}",
+        return e.join(keep.withColumnRenamed("id", "src"), "src", "left_semi").join(
+            keep.withColumnRenamed("id", "dst"), "dst", "left_semi"
         )
-    return e
+
+    e = weighted_edges.select("src", "dst", F.col(weight_col).alias("weight"))
+    return run_supersteps(spark, e, step, rounds).state
 
 
 def coreness_hindex(
@@ -264,23 +222,20 @@ def coreness_hindex(
     """
     from pyspark.sql import Window
 
-    from pgs_spark.operators.state import make_work_dir, snapshot
-
-    work_dir = make_work_dir("pgs_coreness_")
     sym = symmetrize(
         undirected_edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    ).select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    sym = snapshot(sym, work_dir, "sym")
-    vals = sym.groupBy(F.col("u").alias("id")).agg(F.count("*").alias("val"))
+    ).select(F.col("src").alias("u"), F.col("dst").alias("v")).persist()
     w = Window.partitionBy("u").orderBy(F.desc("val"), F.asc("v"))
-    for r in range(rounds):
+
+    def step(vals: DataFrame, _: int) -> DataFrame:
         nbr = sym.join(vals.select(F.col("id").alias("v"), "val"), "v")
         ranked = nbr.withColumn("rn", F.row_number().over(w))
-        vals = (
-            ranked.groupBy(F.col("u").alias("id"))
-            .agg(F.max(F.least(F.col("rn").cast("long"), F.col("val"))).alias("val"))
+        return ranked.groupBy(F.col("u").alias("id")).agg(
+            F.max(F.least(F.col("rn").cast("long"), F.col("val"))).alias("val")
         )
-        vals = snapshot(vals, work_dir, f"vals_{r % 2}")
+
+    degree = sym.groupBy(F.col("u").alias("id")).agg(F.count("*").alias("val"))
+    vals = run_supersteps(spark, degree, step, rounds, persisted=[sym]).state
     return vals.select("id", F.col("val").alias("coreness"))
 
 

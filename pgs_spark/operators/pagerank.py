@@ -390,30 +390,35 @@ def pagerank(
                 F.when(F.col("outdeg").isNull(), F.col("rank")).otherwise(0.0)
             ).alias("d_mass"),
         ).select("id", "rank")
-        new_ranks = cp.save(observed, it + 1, lineage=False)
-        stats = obs.get  # already available — the write above was the action
-        delta = float(stats["delta"])
-        d_mass = float(stats["d_mass"] or 0.0)
-        sb1 = shuffle_bytes(spark)
-        metrics = {
-            "iteration": it + 1,
-            "delta": delta,
-            "dangling_mass": d_mass,
-            "seconds": time.time() - t0,
-            "shuffle_write_bytes": sb1[0] - sb0[0],
-            "shuffle_read_bytes": sb1[1] - sb0[1],
-            "skew_ratio_dst": skew_ratio_dst,
-            "skew_ratio_src": skew_ratio_src,
-            "salted": bool(salt_buckets or auto_salt_agg or auto_salt_join),
-            "salted_join": auto_salt_join,
-            "n_hot_keys": n_hot_keys,
-            "n_hot_src": n_hot_src,
-            "extrapolated": False,
-        }
-        if collect_skew_metrics:
-            metrics["skew_ratio_dst_live"] = skew.skew_ratio(contribs, "dst")
+        metrics = {"iteration": it + 1}
+
+        def _metrics():
+            # runs right after the snapshot write (the action that yields
+            # the observed stats), so the superstep's one manifest carries
+            # the dangling mass a resume needs
+            stats = obs.get
+            sb1 = shuffle_bytes(spark)
+            metrics.update(
+                delta=float(stats["delta"]),
+                dangling_mass=float(stats["d_mass"] or 0.0),
+                seconds=time.time() - t0,
+                shuffle_write_bytes=sb1[0] - sb0[0],
+                shuffle_read_bytes=sb1[1] - sb0[1],
+                skew_ratio_dst=skew_ratio_dst,
+                skew_ratio_src=skew_ratio_src,
+                salted=bool(salt_buckets or auto_salt_agg or auto_salt_join),
+                salted_join=auto_salt_join,
+                n_hot_keys=n_hot_keys,
+                n_hot_src=n_hot_src,
+                extrapolated=False,
+            )
+            if collect_skew_metrics:
+                metrics["skew_ratio_dst_live"] = skew.skew_ratio(contribs, "dst")
+            return metrics
+
+        new_ranks = cp.save(observed, it + 1, lineage=False, metrics_fn=_metrics)
+        delta, d_mass = metrics["delta"], metrics["dangling_mass"]
         history.append(metrics)
-        cp.write_manifest(it + 1, metrics)
 
         # λ-extrapolation fallback: if the real superstep after a jump did not
         # beat the pre-jump delta, the error is not yet in its geometric
@@ -452,17 +457,25 @@ def pagerank(
                         F.when(F.col("outdeg").isNull(), F.col("rank")).otherwise(0.0)
                     ).alias("d_mass"),
                 ).select("id", "rank")
+
+                def _jumped():
+                    # resume must see the jumped vector's dangling mass
+                    metrics.update(
+                        extrapolated=True,
+                        dangling_mass=float(ext_obs.get["d_mass"] or 0.0),
+                    )
+                    return metrics
+
                 plain_path = getattr(new_ranks, "_pgs_snapshot_path", None)
-                new_ranks = cp.save(ext_observed, it + 1, lineage=False, suffix="x")
-                d_mass = float(ext_obs.get["d_mass"] or 0.0)
+                new_ranks = cp.save(
+                    ext_observed, it + 1, lineage=False, suffix="x", metrics_fn=_jumped
+                )
+                d_mass = metrics["dangling_mass"]
                 if plain_path:
                     # the plain snapshot fed the jump and its manifest was
                     # superseded — drop it so prune() bookkeeping stays exact
                     shutil.rmtree(plain_path, ignore_errors=True)
                 ext_pending_delta = delta
-                metrics["extrapolated"] = True
-                metrics["dangling_mass"] = d_mass  # resume must see the jumped mass
-                cp.write_manifest(it + 1, metrics, suffix="x")
 
         cp.prune(keep_last=2)
         prev_delta = delta

@@ -1,15 +1,11 @@
-"""Explicit skew handling: heavy-hitter detection, salted joins, salted aggs.
+"""Explicit skew handling: salted two-stage aggregations and the skew ratio.
 
 Power-law graphs make hub vertices the common case (the synthetic corpus draws
 import targets from a Zipf law on purpose). AQE's skew-join splitting handles
-the *join* side at runtime, but the gather-side ``groupBy`` and any
-pre-partitioned join still benefit from explicit salting — the north rule calls
-for "salted hash join plus groupBy aggregation … heavy-hitter skew splitting".
-
-The algorithm-substitution-by-input-property precedent is the reference's
-matching fallback (PGS_Meshing.java:536-542: try perfect matching, fall back on
-infeasibility) — here: detect heavy keys by degree threshold, route them
-through the salted path, everything else through the plain path.
+the *join* side at runtime, but a gather-side ``groupBy`` whose hub key lands
+in one shuffle partition can still benefit from explicit salting of its final
+aggregation. PageRank's salted hash join for hub out-degree lives in
+operators/pagerank.py.
 """
 
 from __future__ import annotations
@@ -18,36 +14,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def heavy_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Keys whose row count exceeds `threshold` → (key, cnt). Small by
-    construction (power laws have few hubs), so always broadcastable."""
-    return df.groupBy(key).count().filter(F.col("count") > threshold).select(key)
-
-
 def salt_col(key: Column, buckets: int, tag: str = "salt") -> Column:
     """Deterministic salt in [0, buckets): derived from the row's own content
     (never rand() — determinism discipline of PGS_Conversion.java:1087-1088)."""
     return F.pmod(F.xxhash64(key, F.lit(tag)), F.lit(buckets)).cast("int")
-
-
-def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    key: str,
-    buckets: int,
-    how: str = "inner",
-    large_salt_from: str | None = None,
-) -> DataFrame:
-    """Equi-join where the large side's hot keys would overload one task:
-    salt the large side by a second column derived from `large_salt_from`
-    (default: a rotating hash of the key row), explode the small side ×buckets,
-    join on (key, salt). Splits each hot key across `buckets` tasks."""
-    salt_src = F.col(large_salt_from) if large_salt_from else F.monotonically_increasing_id()
-    lg = large.withColumn("_salt", F.pmod(F.xxhash64(salt_src), F.lit(buckets)).cast("int"))
-    sm = small.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))).withColumn(
-        "_salt", F.col("_salt").cast("int")
-    )
-    return lg.join(sm, [key, "_salt"], how).drop("_salt")
 
 
 def salted_sum(

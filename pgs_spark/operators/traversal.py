@@ -6,10 +6,11 @@ SpiralIterator (commons/SpiralIterator.java:16-64: gather unvisited neighbors
 of the frontier, emit ring by ring).
 
 Plan per hop: frontier ⋈ edges → candidate next frontier → anti-join against
-visited. State (visited set) is |V| rows max; it snapshots to parquet each hop
-(off-heap, alternating two paths — the GC fix PageRank/CC got; localCheckpoint
-pinned every hop's visited set on-heap) and the frontier is re-derived from
-the snapshot as ``dist == hop`` — one write + one cheap scan per hop.
+visited. State (visited set) is |V| rows max and runs on
+``state.run_supersteps`` (off-heap parquet snapshots; localCheckpoint pinned
+every hop's visited set on-heap): the frontier is re-derived from the state
+as ``dist == hop - 1``, and the reached count observed on the hop's snapshot
+write stops the loop once a hop reaches nothing new — one action per hop.
 """
 
 from __future__ import annotations
@@ -18,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgs_spark.operators.edges import symmetrize
-from pgs_spark.operators.state import make_work_dir, snapshot
+from pgs_spark.operators.state import run_supersteps
+from pgs_spark.streaming.checkpoint import fingerprint_edges
 
 
 def bfs_distances(
@@ -33,35 +35,10 @@ def bfs_distances(
     `checkpoint_dir` makes the run DURABLE (the PageRank/CC treatment):
     each hop's visited set is checkpointed with a fingerprinted manifest
     (keyed on source + max_hops) and a restarted call resumes mid-traversal;
-    the frontier size rides the checkpoint write via observe()."""
+    the visited count rides the checkpoint write via observe()."""
     sym = symmetrize(undirected_edges).persist()
-    cp = None
-    start_hop = 0
-    visited = None
-    if checkpoint_dir is not None:
-        from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
 
-        cp = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            f"{fingerprint_edges(undirected_edges)}|src={source}|hops={max_hops}",
-        )
-        rp = cp.resume_point()
-        if rp is None:
-            cp.clear()
-        else:
-            start_hop, visited, m = rp
-            if m.get("converged"):
-                sym.unpersist()
-                return visited
-    work_dir = None if cp is not None else make_work_dir("pgs_bfs_")
-    if visited is None:
-        visited = spark.createDataFrame([(int(source), 0)], "id long, dist int")
-        if cp is not None:
-            visited = cp.save(visited, 0, lineage=False)
-        else:
-            visited = snapshot(visited, work_dir, "visited_0")
-    for hop in range(start_hop + 1, max_hops + 1):
+    def step(visited: DataFrame, hop: int) -> DataFrame:
         frontier = visited.filter(F.col("dist") == hop - 1).select("id")
         nxt = (
             frontier.join(sym, frontier.id == sym.src)
@@ -70,34 +47,22 @@ def bfs_distances(
             .join(visited, "id", "left_anti")
             .select("id", F.lit(hop).cast("int").alias("dist"))
         )
-        if cp is not None:
-            from pyspark.sql import Observation
+        return visited.union(nxt)
 
-            obs = Observation()
-            observed = visited.union(nxt).observe(
-                obs,
-                F.sum(
-                    F.when(F.col("dist") == hop, 1).otherwise(0)
-                ).alias("frontier"),
-            )
-            holder = {}
-
-            def _mfn(obs=obs, holder=holder):
-                f = int(obs.get["frontier"] or 0)
-                holder["f"] = f
-                return {"frontier": f, "converged": f == 0}
-
-            visited = cp.save(observed, hop, metrics_fn=_mfn, lineage=False)
-            cp.prune(keep_last=2)
-            if holder["f"] == 0:
-                break
-            continue
-        visited = snapshot(visited.union(nxt), work_dir, f"visited_{hop % 2}")
-        # termination check reads the just-written snapshot — one cheap scan
-        if visited.filter(F.col("dist") == hop).isEmpty():
-            break
-    sym.unpersist()
-    return visited
+    return run_supersteps(
+        spark,
+        spark.createDataFrame([(int(source), 0)], "id long, dist int"),
+        step,
+        max_hops,
+        # a hop that reaches nothing new leaves the visited count unchanged
+        observe=[F.count(F.lit(1)).alias("n")],
+        done=lambda obs, prev: prev is not None and obs["n"] == prev.get("n"),
+        checkpoint_dir=checkpoint_dir,
+        fingerprint=lambda: (
+            f"{fingerprint_edges(undirected_edges)}|src={source}|hops={max_hops}"
+        ),
+        persisted=[sym],
+    ).state
 
 
 def spiral_order(
@@ -255,11 +220,11 @@ def sssp_distances(
     Plan per round: ONE equi-join (state x edges on src) feeding a codegen
     groupBy(min) over state ∪ candidates — the PageRank gather shape with
     min instead of sum; hub skew absorbed by map-side partial min. State is
-    (id, dist) for reached vertices only, snapshotted to parquet
-    (operators/state.py — off-heap, lineage truncated, two alternating
-    paths). Negative weights are rejected: fixed-round relaxation is still
-    well-defined but the fix-point early exit and the "shortest" reading
-    are not.
+    (id, dist) for reached vertices only, snapshotted to parquet by
+    ``state.run_supersteps`` (off-heap, lineage truncated, two snapshots
+    kept) with the signature observed on the write. Negative weights are
+    rejected: fixed-round relaxation is still well-defined but the
+    fix-point early exit and the "shortest" reading are not.
     """
     e = weighted_edges.select(
         "src", "dst", F.col(weight_col).cast("long").alias("w")
@@ -275,28 +240,19 @@ def sssp_distances(
         sym.unpersist()
         raise ValueError("sssp_distances requires non-negative weights")
 
-    from pyspark.sql import Observation
-
-    work_dir = make_work_dir("pgs_sssp_")
-    state = spark.createDataFrame([(int(source), 0)], "id long, dist long")
-    state = snapshot(state, work_dir, "d_0")
-    prev_sig = None
-    for r in range(1, rounds + 1):
+    def step(state: DataFrame, _: int) -> DataFrame:
         cand = state.join(sym, state["id"] == sym["src"]).select(
             sym["dst"].alias("id"), (state["dist"] + sym["w"]).alias("dist")
         )
-        new_state = (
-            state.unionByName(cand).groupBy("id").agg(F.min("dist").alias("dist"))
-        )
-        obs = Observation()
-        observed = new_state.observe(
-            obs, F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        )
-        state = snapshot(observed, work_dir, f"d_{r % 2}")
-        vals = obs.get
-        sig = (int(vals["n"] or 0), int(vals["s"] or 0))
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    sym.unpersist()
-    return state
+        return state.unionByName(cand).groupBy("id").agg(F.min("dist").alias("dist"))
+
+    return run_supersteps(
+        spark,
+        spark.createDataFrame([(int(source), 0)], "id long, dist long"),
+        step,
+        rounds,
+        observe=[F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")],
+        done=lambda obs, prev: prev is not None
+        and (obs["n"], obs["s"]) == (prev["n"], prev["s"]),
+        persisted=[sym],
+    ).state

@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,8 +106,17 @@ class CheckpointManager:
             "partitions": partitions or [],
             "metrics": metrics or {},
         }
-        with open(os.path.join(self.dir, f"manifest_{iteration:05d}.json"), "w") as f:
-            json.dump(manifest, f)
+        # write a temp file and rename it into place: a dump that fails half
+        # way (a non-JSON metric) must not leave a truncated manifest that
+        # every later latest()/prune() would fail to parse
+        fd, tmp = tempfile.mkstemp(dir=self.dir, prefix=".manifest_", suffix=".tmp")
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(manifest, f)
+        except BaseException:
+            os.remove(tmp)
+            raise
+        os.replace(tmp, os.path.join(self.dir, f"manifest_{iteration:05d}.json"))
 
     # -- read ----------------------------------------------------------------
     def latest(self) -> dict | None:

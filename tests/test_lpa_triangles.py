@@ -56,6 +56,36 @@ def test_lpa_seeded_classes(spark):
     assert labels == {r["id"]: r["label"] for r in res2.labels.collect()}
 
 
+def test_lpa_resume_after_crash_in_step_1(spark, tmp_path, monkeypatch):
+    """A crash before superstep 1's manifest leaves only the init manifest
+    (step 0); the rerun resumes from it without rewriting the snapshot it
+    reads, and ends where an uninterrupted run does."""
+    from pgs_spark.streaming.checkpoint import CheckpointManager
+
+    und = canonicalize(edges_df(spark, TWO_CLIQUES + PATH5))
+    cp = str(tmp_path / "lpa_crash")
+    orig = CheckpointManager.write_manifest
+
+    def crash_at_1(self, iteration, *args, **kwargs):
+        if iteration == 1:
+            raise RuntimeError("injected crash before manifest 1")
+        return orig(self, iteration, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointManager, "write_manifest", crash_at_1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        label_propagation(spark, und, max_iter=6, checkpoint_dir=cp)
+    monkeypatch.setattr(CheckpointManager, "write_manifest", orig)
+
+    resumed = label_propagation(spark, und, max_iter=6, checkpoint_dir=cp)
+    straight = label_propagation(spark, und, max_iter=6)
+    got = {r["id"]: r["label"] for r in resumed.labels.collect()}
+    assert got == {r["id"]: r["label"] for r in straight.labels.collect()}
+    assert (resumed.iterations, resumed.converged) == (
+        straight.iterations,
+        straight.converged,
+    )
+
+
 # ---------------- triangles ----------------
 
 @pytest.mark.parametrize(
