@@ -955,7 +955,7 @@ def run_scaling(n_low: int, n_high: int, n_vertices: int, n_edges: int, superste
     # auto-engages and must beat the forced-plain run. (The dst-skewed graph
     # above does not engage join salting: its hubs are absorbed by partial
     # agg; a measured 0.81× throughput for two-stage agg salting there is why
-    # PGS_SALT_AGG is opt-in — see pagerank.py docstring.)
+    # PageRank has no agg salting — see pagerank.py docstring.)
     skew_vertices = int(os.environ.get("PGS_SKEW_VERTICES", str(max(n_vertices // 200, 1000))))
     skew_path = f"/tmp/pgs_bench_srcskew_{skew_vertices}_{n_edges}"
     if not os.path.exists(skew_path + "/_SUCCESS"):
@@ -1239,8 +1239,8 @@ skew_ratio_dst ~{hi.get('skew_ratio_dst')}x) deliberately does NOT engage
 salting by default: Spark's map-side partial aggregation already compresses a
 hub dst key to at most one partial row per task, and we MEASURED the flagged
 two-stage salted sum at 0.81x plain throughput on this graph (the second
-|V|-row exchange is pure overhead). It remains available via PGS_SALT_AGG=1
-for aggregations partial-agg cannot combine. Measurement over assumption.
+|V|-row exchange is pure overhead), so that opt-in path was removed.
+Measurement over assumption.
 
 Reproduce: `python bench.py --scaling`. Extra pinned repeats of a headline
 level (run via `--throughput-worker` under the same taskset/partitions

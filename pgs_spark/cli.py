@@ -62,7 +62,6 @@ def cmd_pagerank(args) -> None:
         tol=args.tol,
         max_iter=args.max_iter,
         checkpoint_dir=args.checkpoint_dir,
-        salt_buckets=args.salt_buckets,
         weight_col=args.weight_col,
     )
     res.ranks.write.mode("overwrite").parquet(args.out)
@@ -216,7 +215,6 @@ def build_parser() -> argparse.ArgumentParser:
     pr.add_argument("--tol", type=float, default=1e-6)
     pr.add_argument("--max-iter", type=int, default=100)
     pr.add_argument("--checkpoint-dir")
-    pr.add_argument("--salt-buckets", type=int)
     pr.add_argument("--weight-col", help="edge weight column (weighted PageRank)")
     pr.set_defaults(fn=cmd_pagerank)
 

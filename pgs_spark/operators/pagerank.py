@@ -9,17 +9,24 @@ per-superstep convergence/error bookkeeping mirrors TangencyPack's superstep
 solver (commons/TangencyPack.java:248-296: iterate, measure residual, stop on
 tolerance with a max-pass guard).
 
-Spark plan per superstep (sparse gather-scatter — ONE job):
-  contribs = weighted_edges ⋈ ranks on src        (hash join; edges side is
-             pre-hash-partitioned on src once, so only the small ranks side
-             shuffles each superstep; AQE skew-join splits hub partitions)
-  gathered = contribs.groupBy(dst).sum            (map-side partial agg; an
-             optional salted two-stage agg splits hub dst keys explicitly)
-  ranks'   = (1-α)/N + α·(gathered + dangling_mass/N)
-  write    = ranks' (id, rank only) → parquet snapshot, with delta and the
+Build (once; six Spark jobs on the unsalted path):
+  w_edges  = edges hash-partitioned on src → (src, dst, w), w = weight / Σ
+             weight over the src block (a window over that partitioning, no
+             join); persisted, so only the |V|-row side shuffles per step
+  vtab     = each weighted edge exploded into its src and dst end, grouped
+             by id: out- and in-edge counts, the dangling flag; persisted
+  stats    = ONE aggregate row over vtab: n, dangling count, |E|, degree
+             max/avg per side, the personalization seed count
+
+Spark plan per superstep (THREE jobs: two exchanges and the snapshot write):
+  contribs = w_edges ⋈ state on src               (shuffle-hash join)
+  ranks'   = (contribs ∪ state).groupBy(id)       (one aggregate exchange:
+             the per-edge contributions are summed, each vertex's own state
+             row carries its old rank and its dangling flag through)
+             → (1-α)/N + α·(Σcontrib + dangling_mass/N)
+  write    = (id, rank, dangling) → parquet snapshot, with delta and the
              next superstep's dangling mass collected by DataFrame.observe()
-             ON THE WRITE JOB itself — no second stats job, no snapshot
-             re-read, no redundant outdeg column in the snapshot.
+             on the write job itself.
 
 State per superstep is |V| rows — tiny relative to |E| — so checkpointing every
 iteration is cheap and gives both flat lineage and mid-convergence resume.
@@ -43,10 +50,10 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pgs_spark.operators import skew
+from pgs_spark.operators.state import make_work_dir
 from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
 
 
@@ -65,9 +72,7 @@ def pagerank(
     tol: float = 1e-6,
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
-    salt_buckets: int | None = None,
     num_partitions: int | None = None,
-    collect_skew_metrics: bool = False,
     fixed_iterations: int | None = None,
     weight_col: str | None = None,
     extrapolate: bool = False,
@@ -95,405 +100,311 @@ def pagerank(
     centrality over a 100-TB link graph; arbitrary seed tables can be
     re-keyed into a slice upstream.
 
-    Heavy-hitter skew splitting AUTO-ENGAGES on the side where skew actually
-    hurts — the GATHER JOIN. The persisted edge table is hash-partitioned on
-    src, so a hub *out*-degree (one vertex fanning its rank to millions of
-    edges) lands that vertex's entire edge block in ONE task: a per-superstep
-    straggler nothing downstream can rebalance. When the build pass finds
+    Heavy-hitter skew splitting engages only where it is detected, on the
+    GATHER JOIN. The persisted edge table is hash-partitioned on src, so a
+    hub *out*-degree (one vertex fanning its rank to millions of edges)
+    lands that vertex's entire edge block in ONE task: a per-superstep
+    straggler nothing downstream can rebalance. When the build finds
     out-degree crossing both an absolute floor (PGS_SALT_MIN_DEGREE, default
     100k) and a relative ratio (PGS_SALT_RATIO × mean, default 16), hot src
     keys get a dst-derived salt baked into the persisted partitioning
     (src, _salt) and the per-superstep rank vector is exploded ×buckets for
     just those keys — the literal "salted hash join … heavy-hitter skew
-    splitting" of the north rule, splitting each hub block across `buckets`
-    tasks. Results are numerically equivalent to the plain path: same
-    contribution rows, same aggregation — only the float summation ORDER of
-    the dst partial sums can differ (at most last-ulp drift; the equality
-    test asserts atol=1e-12, not bit equality).
+    splitting" of the north rule. Results match the plain path up to the
+    float summation order of the partial sums (last-ulp drift).
+    PGS_SALT_DISABLE=1 forces the plain join.
 
     Hub *in*-degree (many edges pointing AT one vertex) is measured and
-    recorded in every manifest (`skew_ratio_dst`) but does NOT trigger agg
-    salting by default: Spark's map-side partial aggregation already
-    compresses a hub dst to ≤1 partial row per task, and BENCH/BASELINE.md
-    records the measurement — a flagged two-stage salted sum on a Zipf graph
-    with in-degree skew 594543× ran at 0.81× plain throughput (the extra
-    |V|-row exchange is pure overhead). PGS_SALT_AGG=1 opts it in for
-    aggregations where partial agg can't combine. Explicit ``salt_buckets``
-    forces the legacy all-keys salted sum; PGS_SALT_DISABLE=1 forces plain
-    everywhere.
+    recorded in every manifest (`skew_ratio_dst`) but needs no splitting:
+    map-side partial aggregation compresses a hub dst to ≤1 partial row per
+    task (BENCH/BASELINE.md measured a salted two-stage sum at 0.81× plain).
     """
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # ---- one-time build (persisted across supersteps) -----------------------
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    out_mass = F.sum(F.col(weight_col)) if weight_col else F.count("*")
-    outdeg = edges.groupBy("src").agg(out_mass.cast("double").alias("outdeg"))
-    # vstate: (id, outdeg|null). Dangling vertices have null outdeg.
-    vstate = (
-        verts.join(outdeg, verts.id == outdeg.src, "left")
-        .select("id", "outdeg")
-        .persist()
-    )
-    # one setup job instead of two: count and dangling-count share a pass
-    nrow = vstate.agg(
-        F.count("*").alias("n"),
-        F.count(F.when(F.col("outdeg").isNull(), F.lit(1))).alias("nd"),
-    ).first()
-    n = int(nrow["n"])
-    n_dangling = int(nrow["nd"] or 0)
-    if n == 0:
-        return PageRankResult(verts.select("id", F.lit(0.0).alias("rank")), 0, True)
-
-    # In/out-degree skew stats in ONE aggregation pass (was two setup jobs):
-    # explode each edge into a (side, key) row and aggregate per side. The
-    # in-degree ratio is exactly the per-superstep gather skew (contribs is
-    # keyed by dst, one row per edge); the out-degree ratio is the hub-block
-    # straggler signal the side salting fixes — outdeg counts EDGES per src
-    # even in weighted mode (block size, not mass, skews a task). `indeg` is
-    # kept as a definition for the opt-in salted-agg branch below.
-    indeg = edges.groupBy("dst").agg(F.count("*").alias("indeg"))
-    srows = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.lit("s").alias("side"), F.col("src").alias("k")),
-                    F.struct(F.lit("d").alias("side"), F.col("dst").alias("k")),
-                )
-            ).alias("e")
-        )
-        .groupBy("e.side", "e.k")
-        .agg(F.count("*").alias("c"))
-        .groupBy("side")
-        .agg(F.max("c").alias("mx"), F.avg("c").alias("avg"), F.sum("c").alias("tot"))
-        .collect()
-    )
-    stats_by_side = {r["side"]: r for r in srows}
-    istats = stats_by_side.get("d")
-    ostats = stats_by_side.get("s")
-    max_indeg = int(istats["mx"] or 0) if istats else 0
-    avg_indeg = float(istats["avg"] or 1.0) if istats else 1.0
-    skew_ratio_dst = round(max_indeg / avg_indeg, 2) if avg_indeg else 1.0
-    max_outdeg = int(ostats["mx"] or 0) if ostats else 0
-    avg_outdeg = float(ostats["avg"] or 1.0) if ostats else 1.0
-    n_edges_total = int(ostats["tot"] or 0) if ostats else 0
-    skew_ratio_src = round(max_outdeg / avg_outdeg, 2) if avg_outdeg else 1.0
-
-    salt_min_degree = int(os.environ.get("PGS_SALT_MIN_DEGREE", "100000"))
-    salt_ratio = float(os.environ.get("PGS_SALT_RATIO", "16"))
-    disable = bool(os.environ.get("PGS_SALT_DISABLE"))
-    # A hub block is a straggler only when it clearly exceeds one partition's
-    # worth of join work (measured 1.4-2.4x wins once the hub's partition is
-    # ~3x the average in the one-wave regime; a wash when extra scheduling
-    # waves absorb it — BENCH/BASELINE.md series); below 1.5 shares salting
-    # is pure overhead.
-    partition_share = n_edges_total / max(num_partitions, 1)
-    auto_salt_join = (
-        salt_buckets is None
-        and not disable
-        and max_outdeg >= salt_min_degree
-        and max_outdeg >= salt_ratio * avg_outdeg
-        and max_outdeg >= 1.5 * partition_share
-    )
-    auto_salt_agg = (
-        salt_buckets is None
-        and not disable
-        and bool(os.environ.get("PGS_SALT_AGG"))
-        and max_indeg >= salt_min_degree
-        and max_indeg >= salt_ratio * avg_indeg
-    )
-    n_hot_keys = 0
-    n_hot_src = 0
-    auto_buckets = min(num_partitions, 32)
-
-    # per-edge contribution weight: 1/outdeg (unweighted) or w/Σw (weighted);
-    # hash-partitioned on the join key ONCE so the per-superstep join only
-    # shuffles the ranks side.
-    contrib_w = (
-        (F.col(weight_col).cast("double") / F.col("outdeg"))
-        if weight_col
-        else (F.lit(1.0) / F.col("outdeg"))
-    )
-    w_edges = edges.join(outdeg, "src").select("src", "dst", contrib_w.alias("w"))
-    heavy_src = None
-    if auto_salt_join:
-        hot_thresh = max(float(salt_min_degree), salt_ratio * avg_outdeg)
-        heavy_src = (
-            edges.groupBy("src").agg(F.count("*").alias("od"))
-            .filter(F.col("od") >= hot_thresh)
-            .select(F.col("src").alias("id"))
-            .persist()
-        )
-        n_hot_src = heavy_src.count()
-        hot_flag = F.broadcast(heavy_src.select(F.col("id").alias("src"), F.lit(True).alias("hs")))
-        # dst-derived salt spreads a hub's edge block across `buckets` tasks;
-        # deterministic (content-derived, never rand()).
-        w_edges = w_edges.join(hot_flag, "src", "left").select(
-            "src",
-            "dst",
-            "w",
-            F.when(
-                F.col("hs"), F.pmod(F.xxhash64("dst"), F.lit(auto_buckets))
-            ).otherwise(F.lit(0)).cast("int").alias("_salt"),
-        )
-        w_edges = w_edges.repartition(num_partitions, "src", "_salt").persist()
-    else:
-        if auto_salt_agg:
-            # flag hub dst keys for the opt-in two-stage salted aggregation
-            hot_thresh = max(float(salt_min_degree), salt_ratio * avg_indeg)
-            heavy = indeg.filter(F.col("indeg") >= hot_thresh).select("dst")
-            n_hot_keys = heavy.count()
-            w_edges = w_edges.join(
-                F.broadcast(heavy.withColumn("hot", F.lit(True))), "dst", "left"
-            ).select("src", "dst", "w", F.coalesce("hot", F.lit(False)).alias("hot"))
-        w_edges = w_edges.repartition(num_partitions, "src").persist()
-    w_edges.count()  # materialize before the loop
-
-    # Superstep state ALWAYS snapshots to parquet: |V| rows is cheap, lineage
-    # stays flat, and — critically — the state lives off-heap (OS page cache).
-    # localCheckpoint keeps every superstep's rows as deserialized on-heap RDD
-    # blocks that unpersist() cannot free; at 20M vertices that produced
-    # multi-second Full GC pauses every superstep.
-    start_iter = 0
-    ranks = None
-    d_mass = float(n_dangling) / n  # all ranks equal at iter 0 → analytic
-    history: list[dict] = []
-    durable = checkpoint_dir is not None
-    if not durable:
-        from pgs_spark.operators.state import make_work_dir
-
-        checkpoint_dir = make_work_dir("pgs_pr_")
-    cp = CheckpointManager(
-        spark, checkpoint_dir, fingerprint_edges(edges) if durable else ""
-    )
-    if durable:
-        resumed = cp.resume_point()
-        if resumed is None:
-            cp.clear()  # stale state from a different input — never mix
-        else:
-            start_iter, ranks, m = resumed
-            d_mass = m.get("dangling_mass", d_mass)
-            if m.get("delta", 1.0) < tol and fixed_iterations is None:
-                vstate.unpersist()  # early return must not leak cached state
-                w_edges.unpersist()
-                if heavy_src is not None:
-                    heavy_src.unpersist()
-                return PageRankResult(ranks.select("id", "rank"), start_iter, True, history)
-    if ranks is None:
-        ranks = vstate.select("id", F.lit(1.0 / n).alias("rank"))
-
-    teleport = (1.0 - alpha) / n
-    p_of = None
-    if personalize_mod is not None:
-        ns = vstate.filter(F.col("id") % personalize_mod == 0).count()
-        if ns == 0:
-            raise ValueError(
-                f"personalize_mod={personalize_mod}: empty seed slice"
-            )
-        p_of = F.when(
-            F.col("id") % personalize_mod == 0, F.lit(1.0) / F.lit(float(ns))
-        ).otherwise(F.lit(0.0))
-    limit = fixed_iterations if fixed_iterations is not None else max_iter
-    converged = False
-
     from pgs_spark.session import shuffle_bytes
 
-    # λ-extrapolation state (opt-in; never in fixed-iteration/oracle mode)
-    prev_delta: float | None = None
-    ext_enabled = extrapolate and fixed_iterations is None
-    ext_pending_delta: float | None = None  # pre-jump delta, for the fallback
+    durable = checkpoint_dir is not None
+    cp = CheckpointManager(
+        spark,
+        checkpoint_dir if durable else make_work_dir("pgs_pr_"),
+        fingerprint_edges(edges) if durable else "",
+    )
+    resumed = cp.resume_point() if durable else None
+    if resumed is None:
+        cp.clear()  # stale state from a different input — never mix
+    elif resumed[2].get("delta", 1.0) < tol and fixed_iterations is None:
+        return PageRankResult(resumed[1].select("id", "rank"), resumed[0], True, [])
 
-    for it in range(start_iter, limit):
-        t0 = time.time()
-        sb0 = shuffle_bytes(spark)
-        # Gather join: edges are already hash-partitioned on src (built once);
-        # SHUFFLE_HASH on the vertex side means only |V| rows shuffle per
-        # superstep, the hash build parallelizes across tasks, and the 50M-row
-        # edge side streams with no sort. (Letting Catalyst pick gives either
-        # a broadcast of the full rank vector — a *serial* build that caps
-        # scaling, Amdahl — or a sort-merge join that re-sorts the edges every
-        # superstep.)
-        out_cols = ["dst", (F.col("rank") * F.col("w")).alias("contrib")] + (
-            ["hot"] if auto_salt_agg else []
+    # ---- one-time build: the weighted edge table, one vertex aggregate ------
+    # per-edge contribution weight: 1/outdeg (unweighted) or w/Σw (weighted),
+    # summed over each src block of the edge table hash-partitioned on src —
+    # the partitioning the per-superstep join reuses, so only the |V|-row
+    # side shuffles per superstep.
+    mass = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+    w_edges = (
+        edges.repartition(num_partitions, "src")
+        .select("src", "dst", (mass / F.sum(mass).over(Window.partitionBy("src"))).alias("w"))
+        .persist()
+    )
+    # per vertex, ONE explode(src|dst) aggregate: out- and in-edge counts, and
+    # whether it dangles (no out-edge carries a weight: none, or null weights)
+    end = lambda v, w, o: F.struct(  # noqa: E731
+        F.col(v).alias("id"), w.alias("w"), F.lit(o).alias("o"), F.lit(1 - o).alias("i")
+    )
+    ends = F.array(end("src", F.col("w"), 1), end("dst", F.lit(None).cast("double"), 0))
+    vtab = (
+        w_edges.select(F.explode(ends).alias("e"))
+        .groupBy("e.id")
+        .agg(
+            F.sum("e.o").alias("out_n"),
+            F.sum("e.i").alias("in_n"),
+            (F.count("e.w") == 0).alias("dangling"),
         )
-        if auto_salt_join:
-            # SALTED HASH JOIN: hub src keys need their rank at every salt in
-            # [0, buckets); cold keys only at salt 0. The replicated side is
-            # |hot| × buckets rows — tiny (hot sets are hubs by definition).
-            base = ranks.select("id", "rank")
-            hot_ranks = base.join(heavy_src, "id", "left_semi").select(
-                "id",
-                "rank",
-                F.explode(
-                    F.sequence(F.lit(1).cast("int"), F.lit(auto_buckets - 1).cast("int"))
-                ).alias("_salt"),
+        .persist()
+    )
+    cached = [w_edges, vtab]
+    try:
+        avg_pos = lambda c: F.avg(F.when(F.col(c) > 0, F.col(c)))  # noqa: E731
+        seed = F.col("id") % personalize_mod == 0 if personalize_mod is not None else F.lit(False)
+        st = vtab.agg(
+            F.count("*").alias("n"),
+            F.count(F.when(F.col("dangling"), 1)).alias("nd"),
+            F.sum("out_n").alias("m"),
+            F.max("out_n").alias("max_out"),
+            avg_pos("out_n").alias("avg_out"),
+            F.max("in_n").alias("max_in"),
+            avg_pos("in_n").alias("avg_in"),
+            F.count(F.when(seed, 1)).alias("ns"),
+        ).collect()[0]
+        n = int(st["n"])
+        if n == 0:
+            return PageRankResult(vtab.select("id", F.lit(0.0).alias("rank")), 0, True)
+        max_out, avg_out = int(st["max_out"]), float(st["avg_out"])
+        skew_ratio_src = round(max_out / avg_out, 2)
+        skew_ratio_dst = round(int(st["max_in"]) / float(st["avg_in"]), 2)
+        if personalize_mod is not None and st["ns"] == 0:
+            raise ValueError(f"personalize_mod={personalize_mod}: empty seed slice")
+
+        # A hub block is a straggler only when it clearly exceeds one
+        # partition's worth of join work (measured 1.4-2.4x wins once the
+        # hub's partition is ~3x the average in the one-wave regime; a wash
+        # when extra scheduling waves absorb it — BENCH/BASELINE.md series).
+        hot_thresh = max(
+            float(os.environ.get("PGS_SALT_MIN_DEGREE", "100000")),
+            float(os.environ.get("PGS_SALT_RATIO", "16")) * avg_out,
+        )
+        salted = (
+            not os.environ.get("PGS_SALT_DISABLE")
+            and max_out >= hot_thresh
+            and max_out >= 1.5 * int(st["m"]) / max(num_partitions, 1)
+        )
+        buckets = min(num_partitions, 32)
+        n_hot_src = 0
+        if salted:
+            heavy_src = vtab.filter(F.col("out_n") >= hot_thresh).select("id")
+            n_hot_src = heavy_src.count()
+            hot_flag = F.broadcast(
+                heavy_src.select(F.col("id").alias("src"), F.lit(True).alias("hs"))
             )
-            ranks_side = base.select(
-                "id", "rank", F.lit(0).cast("int").alias("_salt")
-            ).unionByName(hot_ranks)
-            contribs = w_edges.join(
-                ranks_side.hint("shuffle_hash"),
-                (w_edges.src == ranks_side.id) & (w_edges._salt == ranks_side._salt),
-            ).select(*out_cols)
-        else:
-            contribs = w_edges.join(
-                ranks.select("id", "rank").hint("shuffle_hash"),
-                w_edges.src == F.col("id"),
-            ).select(*out_cols)
-        if salt_buckets:
-            gathered = skew.salted_sum(contribs, "dst", "contrib", salt_buckets)
-        elif auto_salt_agg:
-            gathered = skew.salted_sum_flagged(
-                contribs, "dst", "contrib", auto_buckets, "hot"
+            # dst-derived salt spreads a hub's edge block across `buckets`
+            # tasks; deterministic (content-derived, never rand()).
+            salted_edges = (
+                w_edges.join(hot_flag, "src", "left")
+                .select(
+                    "src",
+                    "dst",
+                    "w",
+                    F.when(F.col("hs"), F.pmod(F.xxhash64("dst"), F.lit(buckets)))
+                    .otherwise(F.lit(0)).cast("int").alias("_salt"),
+                )
+                .repartition(num_partitions, "src", "_salt")
+                .persist()
             )
-        else:
-            gathered = contribs.groupBy("dst").agg(F.sum("contrib").alias("contrib"))
-        # ONE job per superstep: pre-join the old ranks (co-hashed |V|-row
-        # join), attach delta + next-superstep dangling mass as observed
-        # metrics, and let the snapshot WRITE be the action that yields them.
-        # The snapshot itself carries only (id, rank) — outdeg lives in the
-        # persisted vstate, re-writing it every superstep was 1/3 wasted bytes.
-        pre = (
-            vstate.join(gathered, vstate.id == gathered.dst, "left")
-            .join(ranks.select("id", F.col("rank").alias("old_rank")), "id")
-            .select(
-                "id",
-                "outdeg",
-                "old_rank",
-                (
-                    (
-                        F.lit(1.0 - alpha) * p_of
-                        + F.lit(alpha)
-                        * (
-                            F.coalesce(F.col("contrib"), F.lit(0.0))
-                            + F.lit(d_mass) * p_of
+            cached.append(salted_edges)
+            # materialize from the cached plain table, then release that one
+            salted_edges.write.format("noop").mode("overwrite").save()
+            w_edges.unpersist()
+            w_edges = salted_edges
+
+        # Superstep state ALWAYS snapshots to parquet: |V| rows is cheap,
+        # lineage stays flat, and the state lives off-heap (OS page cache)
+        # instead of as on-heap RDD blocks unpersist() cannot free promptly.
+        start_iter = 0
+        state = vtab.select("id", F.lit(1.0 / n).alias("rank"), "dangling")
+        d_mass = float(st["nd"]) / n  # all ranks equal at iter 0 → analytic
+        if resumed is not None:
+            start_iter, state, m = resumed
+            d_mass = m.get("dangling_mass", d_mass)
+            if "dangling" not in state.columns:
+                # a snapshot written before the flag was stored: rebuild it
+                state = state.select("id", "rank").join(vtab.select("id", "dangling"), "id")
+
+        p_of = None
+        if personalize_mod is not None:
+            p_of = F.when(seed, F.lit(1.0 / float(st["ns"]))).otherwise(F.lit(0.0))
+
+        def rank_of(dm):
+            """rank' from the gathered contributions and the dangling mass dm"""
+            c = F.col("contrib")
+            if p_of is None:
+                return F.lit((1.0 - alpha) / n) + F.lit(alpha) * (c + F.lit(dm / n))
+            return F.lit(1.0 - alpha) * p_of + F.lit(alpha) * (c + F.lit(dm) * p_of)
+
+        # static parts of the superstep plan, built once (each Column is a JVM
+        # round trip, and plan building is a fixed cost of every superstep)
+        contrib_cols = [F.col("dst").alias("id"), (F.col("rank") * F.col("w")).alias("contrib")]
+        own_cols = ["id", F.lit(0.0).alias("contrib"), F.col("rank").alias("old"), "dangling"]
+        gather_aggs = [
+            F.sum("contrib").alias("contrib"),
+            F.max("old").alias("old"),
+            F.max("dangling").alias("dangling"),
+        ]
+        limit = fixed_iterations if fixed_iterations is not None else max_iter
+        converged = False
+        history: list[dict] = []
+
+        # λ-extrapolation state (opt-in; never in fixed-iteration/oracle mode)
+        prev_delta: float | None = None
+        ext_enabled = extrapolate and fixed_iterations is None
+        ext_pending_delta: float | None = None  # pre-jump delta, for the fallback
+
+        for it in range(start_iter, limit):
+            t0 = time.time()
+            sb0 = shuffle_bytes(spark)
+            # Gather join: edges are already hash-partitioned on src (built
+            # once); SHUFFLE_HASH on the vertex side means only |V| rows
+            # shuffle per superstep, the hash build parallelizes across tasks,
+            # and the edge side streams with no sort. (Letting Catalyst pick
+            # gives either a broadcast of the full rank vector — a *serial*
+            # build that caps scaling, Amdahl — or a sort-merge join that
+            # re-sorts the edges every superstep.)
+            ranks = state
+            if salted:
+                # SALTED HASH JOIN: hub src keys need their rank at every salt
+                # in [0, buckets); cold keys only at salt 0. The replicated
+                # side is |hot| × buckets rows — tiny (hot sets are hubs).
+                hot_ranks = state.join(heavy_src, "id", "left_semi").select(
+                    "id",
+                    "rank",
+                    F.explode(F.sequence(F.lit(1), F.lit(buckets - 1))).alias("_salt"),
+                )
+                ranks = state.select("id", "rank", F.lit(0).alias("_salt")).unionByName(hot_ranks)
+                on = (w_edges.src == ranks.id) & (w_edges._salt == ranks._salt)
+            else:
+                on = w_edges.src == ranks.id
+            contribs = w_edges.join(ranks.hint("shuffle_hash"), on).select(*contrib_cols)
+            # ONE aggregate exchange: each vertex's own state row joins its
+            # contributions in the groupBy, carrying the old rank (for delta)
+            # and the dangling flag (for the next superstep's mass).
+            gathered = (
+                contribs.unionByName(state.select(*own_cols), allowMissingColumns=True)
+                .groupBy("id")
+                .agg(*gather_aggs)
+            )
+            rank = rank_of(d_mass)
+            obs = Observation()
+            observed = gathered.observe(
+                obs,
+                F.sum(F.abs(rank - F.col("old"))).alias("delta"),
+                F.sum(F.when(F.col("dangling"), rank).otherwise(0.0)).alias("d_mass"),
+            ).select("id", rank.alias("rank"), "dangling")
+            metrics = {"iteration": it + 1}
+
+            def _metrics():
+                # runs right after the snapshot write (the action that yields
+                # the observed stats), so the superstep's one manifest carries
+                # the dangling mass a resume needs
+                stats = obs.get
+                sb1 = shuffle_bytes(spark)
+                metrics.update(
+                    delta=float(stats["delta"]),
+                    dangling_mass=float(stats["d_mass"] or 0.0),
+                    seconds=time.time() - t0,
+                    shuffle_write_bytes=sb1[0] - sb0[0],
+                    shuffle_read_bytes=sb1[1] - sb0[1],
+                    skew_ratio_dst=skew_ratio_dst,
+                    skew_ratio_src=skew_ratio_src,
+                    salted=salted,
+                    salted_join=salted,
+                    n_hot_keys=0,
+                    n_hot_src=n_hot_src,
+                    extrapolated=False,
+                )
+                return metrics
+
+            new_state = cp.save(observed, it + 1, lineage=False, metrics_fn=_metrics)
+            delta, d_mass = metrics["delta"], metrics["dangling_mass"]
+            history.append(metrics)
+
+            # λ-extrapolation fallback: if the real superstep after a jump did
+            # not beat the pre-jump delta, the error is not yet in its
+            # geometric regime — stop jumping (plain power iteration always
+            # converges).
+            if ext_pending_delta is not None:
+                if delta >= ext_pending_delta:
+                    ext_enabled = False
+                ext_pending_delta = None
+            elif (
+                ext_enabled
+                and prev_delta is not None
+                and prev_delta > 0.0
+                and delta > tol
+                and (it + 1 - start_iter) % 3 == 0
+            ):
+                lam = delta / prev_delta
+                # jump only inside the geometric regime; λ→1 would divide by ~0
+                if 0.05 < lam < 0.98:
+                    factor = lam / (1.0 - lam)
+                    ext_obs = Observation()
+                    ext_observed = (
+                        new_state.join(state.select("id", F.col("rank").alias("r1")), "id")
+                        .select(
+                            "id",
+                            (F.col("rank") + (F.col("rank") - F.col("r1")) * F.lit(factor))
+                            .alias("rank"),
+                            "dangling",
+                        )
+                        .observe(
+                            ext_obs,
+                            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))
+                            .alias("d_mass"),
                         )
                     )
-                    if p_of is not None
-                    else (
-                        F.lit(teleport)
-                        + F.lit(alpha)
-                        * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(d_mass / n))
+
+                    def _jumped():
+                        # resume must see the jumped vector's dangling mass
+                        metrics.update(
+                            extrapolated=True,
+                            dangling_mass=float(ext_obs.get["d_mass"] or 0.0),
+                        )
+                        return metrics
+
+                    plain_path = getattr(new_state, "_pgs_snapshot_path", None)
+                    new_state = cp.save(
+                        ext_observed, it + 1, lineage=False, suffix="x", metrics_fn=_jumped
                     )
-                ).alias("rank"),
-            )
-        )
-        obs = Observation()
-        observed = pre.observe(
-            obs,
-            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-            F.sum(
-                F.when(F.col("outdeg").isNull(), F.col("rank")).otherwise(0.0)
-            ).alias("d_mass"),
-        ).select("id", "rank")
-        metrics = {"iteration": it + 1}
+                    d_mass = metrics["dangling_mass"]
+                    if plain_path:
+                        # the plain snapshot fed the jump and its manifest was
+                        # superseded — drop it so prune() bookkeeping stays exact
+                        shutil.rmtree(plain_path, ignore_errors=True)
+                    ext_pending_delta = delta
 
-        def _metrics():
-            # runs right after the snapshot write (the action that yields
-            # the observed stats), so the superstep's one manifest carries
-            # the dangling mass a resume needs
-            stats = obs.get
-            sb1 = shuffle_bytes(spark)
-            metrics.update(
-                delta=float(stats["delta"]),
-                dangling_mass=float(stats["d_mass"] or 0.0),
-                seconds=time.time() - t0,
-                shuffle_write_bytes=sb1[0] - sb0[0],
-                shuffle_read_bytes=sb1[1] - sb0[1],
-                skew_ratio_dst=skew_ratio_dst,
-                skew_ratio_src=skew_ratio_src,
-                salted=bool(salt_buckets or auto_salt_agg or auto_salt_join),
-                salted_join=auto_salt_join,
-                n_hot_keys=n_hot_keys,
-                n_hot_src=n_hot_src,
-                extrapolated=False,
-            )
-            if collect_skew_metrics:
-                metrics["skew_ratio_dst_live"] = skew.skew_ratio(contribs, "dst")
-            return metrics
-
-        new_ranks = cp.save(observed, it + 1, lineage=False, metrics_fn=_metrics)
-        delta, d_mass = metrics["delta"], metrics["dangling_mass"]
-        history.append(metrics)
-
-        # λ-extrapolation fallback: if the real superstep after a jump did not
-        # beat the pre-jump delta, the error is not yet in its geometric
-        # regime — stop jumping (plain power iteration always converges).
-        if ext_pending_delta is not None:
-            if delta >= ext_pending_delta:
-                ext_enabled = False
-            ext_pending_delta = None
-        elif (
-            ext_enabled
-            and prev_delta is not None
-            and prev_delta > 0.0
-            and delta > tol
-            and (it + 1 - start_iter) % 3 == 0
-        ):
-            lam = delta / prev_delta
-            # jump only inside the geometric regime; λ→1 would divide by ~0
-            if 0.05 < lam < 0.98:
-                factor = lam / (1.0 - lam)
-                ext_pre = (
-                    new_ranks.select("id", F.col("rank").alias("r2"))
-                    .join(ranks.select("id", F.col("rank").alias("r1")), "id")
-                    .join(vstate, "id")
-                    .select(
-                        "id",
-                        "outdeg",
-                        (
-                            F.col("r2") + (F.col("r2") - F.col("r1")) * F.lit(factor)
-                        ).alias("rank"),
-                    )
-                )
-                ext_obs = Observation()
-                ext_observed = ext_pre.observe(
-                    ext_obs,
-                    F.sum(
-                        F.when(F.col("outdeg").isNull(), F.col("rank")).otherwise(0.0)
-                    ).alias("d_mass"),
-                ).select("id", "rank")
-
-                def _jumped():
-                    # resume must see the jumped vector's dangling mass
-                    metrics.update(
-                        extrapolated=True,
-                        dangling_mass=float(ext_obs.get["d_mass"] or 0.0),
-                    )
-                    return metrics
-
-                plain_path = getattr(new_ranks, "_pgs_snapshot_path", None)
-                new_ranks = cp.save(
-                    ext_observed, it + 1, lineage=False, suffix="x", metrics_fn=_jumped
-                )
-                d_mass = metrics["dangling_mass"]
-                if plain_path:
-                    # the plain snapshot fed the jump and its manifest was
-                    # superseded — drop it so prune() bookkeeping stays exact
-                    shutil.rmtree(plain_path, ignore_errors=True)
-                ext_pending_delta = delta
-
-        cp.prune(keep_last=2)
-        prev_delta = delta
-        ranks = new_ranks
-        iterations = it + 1
-        if fixed_iterations is None and delta < tol:
-            converged = True
-            break
-    else:
-        iterations = start_iter if limit <= start_iter else limit
-
-    vstate.unpersist()
-    w_edges.unpersist()
-    if heavy_src is not None:
-        heavy_src.unpersist()
+            cp.prune(keep_last=2)
+            prev_delta = delta
+            state = new_state
+            iterations = it + 1
+            if fixed_iterations is None and delta < tol:
+                converged = True
+                break
+        else:
+            iterations = start_iter if limit <= start_iter else limit
+    finally:
+        for df in cached:
+            df.unpersist()
     if fixed_iterations is not None:
         converged = True
     # NOTE: with an ephemeral temp dir the returned DataFrame reads from that
     # dir's final snapshot — it is pruned to the last two snapshots and left
     # on disk (removing it would invalidate the returned DataFrame).
-    return PageRankResult(ranks.select("id", "rank"), iterations, converged, history)
+    return PageRankResult(state.select("id", "rank"), iterations, converged, history)

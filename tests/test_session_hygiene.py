@@ -10,6 +10,7 @@ from pgs_spark.operators.dag import build_order
 from pgs_spark.operators.hyperball import hyperball
 from pgs_spark.operators.label_propagation import label_propagation
 from pgs_spark.operators.merge import kcore
+from pgs_spark.operators.pagerank import pagerank
 from pgs_spark.operators.traversal import bfs_distances, sssp_distances
 from pgs_spark.operators.triangles import triangle_count
 from pgs_spark.streaming.checkpoint import CheckpointManager
@@ -38,8 +39,8 @@ def test_cc_and_triangles_leave_session_unchanged(spark, tmp_path):
     assert _session_state(spark) == before
 
 
-# superstep loops on state.run_supersteps, each run on an 8-vertex path
-# (every loop gets past step 2 on it)
+# superstep loops (on state.run_supersteps, and PageRank's own), each run on
+# an 8-vertex path (every loop gets past step 2 on it)
 SUPERSTEP_OPS = {
     "lpa": lambda spark, e: label_propagation(spark, e, max_iter=5).labels,
     "bfs": lambda spark, e: bfs_distances(spark, e, 0, max_hops=6),
@@ -49,6 +50,7 @@ SUPERSTEP_OPS = {
         spark, e, spark.createDataFrame([(i, i) for i in range(8)], "id long, scc long")
     ).assignments,
     "hyperball": lambda spark, e: hyperball(spark, e, supersteps=3),
+    "pagerank": lambda spark, e: pagerank(spark, e, fixed_iterations=4).ranks,
 }
 
 
