@@ -1,1 +1,1 @@
-from pgs_spark.functions.extract import extract_refs, with_refs  # noqa: F401
+from pgs_spark.functions.extract import with_refs  # noqa: F401

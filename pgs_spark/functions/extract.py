@@ -1,52 +1,38 @@
-"""Vectorized import/dependency-reference extraction from source content.
+"""Import/dependency-reference extraction from source content, as one JVM plan.
 
 Graft of PGS_Conversion.toDualGraph's phase 1 (PGS_Conversion.java:1068-1085):
 each raw record (face) is decomposed into its boundary keys (canonical PEdges);
-here each source file is decomposed into the repo names it imports. Per the
-input_hint this is a *vectorized* pandas/Arrow UDF — one Arrow batch at a time,
-`pandas.Series.str.findall` per language, zero per-row Python UDF calls.
+here each source file is decomposed into the repo names it imports. The match
+is one ``regexp_extract_all`` per language, chosen by ``lang``, so the pass
+runs inside the executor JVM with no Python worker and no Arrow transfer.
 
-The UDF also re-hashes the content it actually saw (sha256), so the pipeline
-can assert row-for-row that the Arrow transfer did not mutate the input — the
-per-row invariant required by BASELINE.json (`content sha256 equality`).
+The per-row sha256 invariant (BASELINE.json: content sha256 equality) is
+checked in the same pass: ``sha2(content, 256)`` against the stamped column,
+and a mismatch fails the job naming the repo.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+# Python `re`'s str classes spelled for java.util.regex. `(?U)\w` disagrees
+# with Python on 3,856 code points (`²` is a word character to Python only,
+# U+0301 to Java only) and `(?U)\s` misses U+001C–U+001F; `(?d)` keeps `^`
+# from matching after `\r`, U+0085 and U+2028. One gap stays: the 525 code
+# points that became letters after Unicode 13 (the JDK 17 tables) are `\w` to
+# Python 3.11 and not to Java, so a repo name spelled with one is cut short.
+_W = r"[\p{L}\p{N}_]"
+_S = r"[\s\x{1c}-\x{1f}]"
 
 # Anchored per-language import patterns. The filler/decoy lines in the
 # synthetic corpus (and real code comments) contain the word "import" inside
 # strings/comments; anchoring to line start keeps extraction honest.
 LANG_PATTERNS = {
-    "python": r"(?m)^\s*(?:import|from)\s+(repo_\w+)",
-    "java": r"(?m)^\s*import\s+(?:static\s+)?(repo_\w+)\.",
-    "js": r"(?m)require\(\s*['\"](repo_\w+)['\"]\s*\)",
+    "python": rf"(?dUm)^{_S}*(?:import|from){_S}+(repo_{_W}+)",
+    "java": rf"(?dUm)^{_S}*import{_S}+(?:static{_S}+)?(repo_{_W}+)\.",
+    "js": rf"(?dU)require\({_S}*['\"](repo_{_W}+)['\"]{_S}*\)",
 }
-
-_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("refs", T.ArrayType(T.StringType()), False),
-        T.StructField("content_sha", T.StringType(), False),
-    ]
-)
-
-
-@F.pandas_udf(_RESULT_TYPE)
-def extract_refs(content: pd.Series, lang: pd.Series) -> pd.DataFrame:
-    """Arrow-batched extraction: content×lang → (refs array, sha256-as-seen)."""
-    refs = pd.Series([[]] * len(content), index=content.index, dtype=object)
-    for lg, pattern in LANG_PATTERNS.items():
-        mask = lang == lg
-        if mask.any():
-            refs[mask] = content[mask].str.findall(pattern)
-    sha = content.map(lambda c: hashlib.sha256(c.encode("utf-8")).hexdigest())
-    return pd.DataFrame({"refs": refs, "content_sha": sha})
 
 
 def normalize_ref(ref: Column) -> Column:
@@ -56,57 +42,38 @@ def normalize_ref(ref: Column) -> Column:
     return F.lower(F.trim(ref))
 
 
+def _sha_mismatch() -> Column:
+    """True where the content's sha256 is not its stamp; a null stamp counts."""
+    return ~F.sha2(F.col("content"), 256).eqNullSafe(F.col("sha256"))
+
+
 def with_refs(code_files: DataFrame, verify_sha: bool = True) -> DataFrame:
     """code_files → one row per (repo, ref) import reference.
 
-    Single-pass ``mapInPandas``: verification, per-language findall, and the
-    explode all happen inside one Arrow batch round-trip. (A scalar UDF
-    referenced by both a Filter and a Project gets TWO ArrowEvalPython nodes —
-    the extraction would run twice; measured 22.6s vs 8.2s on 100k files.)
-    The lang filter and column pruning are pushed *before* the Python stage
-    (cheap predicates first — the PGS_CirclePacking.java:289-296 discipline).
+    The lang filter and column pruning come first (cheap predicates first —
+    the PGS_CirclePacking.java:289-296 discipline). With ``verify_sha`` a row
+    whose content does not hash to its stamp fails the job: silently dropping
+    it would shrink the edge table with no signal. (A stamp computed as
+    ``sha2(content, 256)`` in the same plan is proved equal by the optimizer,
+    which then drops the check.)
     """
-    langs = list(LANG_PATTERNS)
     cols = ["repo", "lang", "content"] + (["sha256"] if verify_sha else [])
-    base = code_files.filter(F.col("lang").isin(langs)).select(*cols)
-
-    def _extract(batches):
-        for pdf in batches:
-            if verify_sha and len(pdf):
-                seen = pdf["content"].map(
-                    lambda c: hashlib.sha256(c.encode("utf-8")).hexdigest()
-                )
-                bad = (seen != pdf["sha256"]).sum()
-                if bad:
-                    # Fail loudly: a sha mismatch means the Arrow transfer (or
-                    # the upstream stamp) corrupted content — silently dropping
-                    # rows would shrink the edge table with no signal,
-                    # violating the row-for-row integrity contract
-                    # (BASELINE.json input_hint: content sha256 equality).
-                    raise ValueError(
-                        f"with_refs: {int(bad)} row(s) failed sha256 verification "
-                        f"(first bad repo: {pdf.loc[seen != pdf['sha256'], 'repo'].iloc[0]!r})"
-                    )
-            outs = []
-            for lg, pattern in LANG_PATTERNS.items():
-                mask = pdf["lang"] == lg
-                if mask.any():
-                    sub = pdf[mask]
-                    found = sub["content"].str.findall(pattern)
-                    outs.append(
-                        pd.DataFrame({"repo": sub["repo"], "ref": found})
-                        .explode("ref")
-                        .dropna(subset=["ref"])
-                    )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    refs = base.mapInPandas(_extract, schema="repo string, ref string")
+    base = code_files.filter(F.col("lang").isin(list(LANG_PATTERNS))).select(*cols)
+    if verify_sha:
+        failure = F.raise_error(
+            F.format_string("with_refs: sha256 verification failed for repo %s", "repo")
+        )
+        base = base.filter(F.when(_sha_mismatch(), failure).otherwise(F.lit(True)))
+    found = None
+    for lang, pattern in LANG_PATTERNS.items():
+        hit = F.col("lang") == lang
+        matches = F.regexp_extract_all("content", F.lit(pattern), F.lit(1))
+        found = F.when(hit, matches) if found is None else found.when(hit, matches)
+    refs = base.select("repo", F.explode(found).alias("ref"))
     return refs.select("repo", normalize_ref(F.col("ref")).alias("ref"))
 
 
 def sha_violations(code_files: DataFrame) -> int:
-    """Count rows whose UDF-observed sha256 differs from the stamped one
-    (must be 0 — the round-trip integrity check of SURVEY §5.6)."""
-    ext = code_files.withColumn("ext", extract_refs(F.col("content"), F.col("lang")))
-    return ext.filter(F.col("ext.content_sha") != F.col("sha256")).count()
+    """Count rows whose content does not hash to the stamped sha256, a null
+    stamp included (must be 0 — the integrity check of SURVEY §5.6)."""
+    return code_files.filter(_sha_mismatch()).count()

@@ -203,8 +203,8 @@ def fr_layout(
 
 
 def _fr_iteration_sql(k: float, r_cut: float, t: float, width: float) -> str:
-    """One FR superstep as a single SQL text over the temp views
-    ``__pgs_fr_pos`` / ``__pgs_fr_sym``.
+    """One FR superstep as a single SQL text over the DataFrame parameters
+    ``{pos}`` / ``{sym}`` (bound by ``spark.sql``).
 
     Why SQL text instead of the DataFrame API: building this plan through
     py4j Column calls cost a measured 0.35–0.45s of DRIVER time per
@@ -245,7 +245,7 @@ def _fr_iteration_sql(k: float, r_cut: float, t: float, width: float) -> str:
     dlen = "sqrt(dx*dx + dy*dy)"
     return f"""
 WITH cells AS (SELECT id, x, y, floor(x / {RC}) AS cx, floor(y / {RC}) AS cy
-  FROM __pgs_fr_pos),
+  FROM {{pos}}),
 rep_same AS (
   SELECT a.id,
          (a.x - b.x) * {K2} / {d2} AS fx,
@@ -275,9 +275,9 @@ att AS (
   SELECT s.src AS id,
          -(a.x - b.x) * {ad} / {K} AS fx,
          -(a.y - b.y) * {ad} / {K} AS fy
-  FROM __pgs_fr_sym s
-  JOIN __pgs_fr_pos a ON s.src = a.id
-  JOIN __pgs_fr_pos b ON s.dst = b.id),
+  FROM {{sym}} s
+  JOIN {{pos}} a ON s.src = a.id
+  JOIN {{pos}} b ON s.dst = b.id),
 disp AS (
   SELECT id, SUM(fx) AS dx, SUM(fy) AS dy FROM
     (SELECT * FROM rep_same UNION ALL SELECT * FROM rep_cross
@@ -287,7 +287,7 @@ moved AS (
   SELECT p.id, p.x, p.y,
          COALESCE(d.dx, CAST(0.0 AS DOUBLE)) AS dx,
          COALESCE(d.dy, CAST(0.0 AS DOUBLE)) AS dy
-  FROM __pgs_fr_pos p LEFT JOIN disp d ON p.id = d.id)
+  FROM {{pos}} p LEFT JOIN disp d ON p.id = d.id)
 SELECT id,
   least(greatest(x + dx * (CASE WHEN {dlen} > {T} THEN {T} / {dlen}
     ELSE CAST(1.0 AS DOUBLE) END), CAST(0.0 AS DOUBLE)), {W}) AS x,
@@ -301,14 +301,10 @@ def _fr_iteration(
     sym: DataFrame, pos: DataFrame, k: float, r_cut: float, t: float, width: float
 ) -> DataFrame:
     """One FR superstep (pure plan — exposed so tests can assert the
-    repulsion joins never degrade to a CartesianProduct). Registers the two
-    loop temp views and parses the SQL program (see `_fr_iteration_sql` for
-    why SQL text); assumes the session-exclusive use the loop already
-    documents."""
-    spark = pos.sparkSession
-    sym.createOrReplaceTempView("__pgs_fr_sym")
-    pos.createOrReplaceTempView("__pgs_fr_pos")
-    return spark.sql(_fr_iteration_sql(k, r_cut, t, width))
+    repulsion joins never degrade to a CartesianProduct). Parses the SQL
+    program (see `_fr_iteration_sql` for why SQL text) with ``pos`` and
+    ``sym`` as DataFrame parameters, so no view outlives the call."""
+    return pos.sparkSession.sql(_fr_iteration_sql(k, r_cut, t, width), pos=pos, sym=sym)
 
 
 def fr_layout_sql(

@@ -22,8 +22,8 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     AQE is on (runtime coalescing + skew-join splitting); Arrow is on for the
-    pandas-UDF extraction path; timezone pinned UTC so DuckDB oracle
-    comparisons are stable.
+    ``mapInPandas`` stages of ``multimodal`` and ``pairs`` (extraction runs no
+    Python); timezone pinned UTC so DuckDB oracle comparisons are stable.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:

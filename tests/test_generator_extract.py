@@ -1,5 +1,9 @@
 """Generator determinism + extraction correctness (SURVEY §5.1, §5.6)."""
 
+import re
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from pgs_spark.functions.extract import sha_violations, with_refs
@@ -69,3 +73,65 @@ def test_repo_table_ids_stable(spark):
     b = repo_table(spark, 50).collect()
     assert {(r["repo"], r["repo_id"]) for r in a} == {(r["repo"], r["repo_id"]) for r in b}
     assert len({r["repo_id"] for r in a}) == 50
+
+
+# The Python `re` patterns extraction was first written with; the JVM plan
+# must find exactly what `re.findall` finds with them.
+PY_PATTERNS = {
+    "python": r"(?m)^\s*(?:import|from)\s+(repo_\w+)",
+    "java": r"(?m)^\s*import\s+(?:static\s+)?(repo_\w+)\.",
+    "js": r"(?m)require\(\s*['\"](repo_\w+)['\"]\s*\)",
+}
+
+# Word characters on which Python and Java's (?U) disagree (², ³ and U+0301),
+# digits and letters they agree on, whitespace Java's (?U)\s lacks
+# (U+001C–U+001F) or has (U+00A0, U+3000, U+0085), and line breaks Java's `^`
+# honours without (?d) (a lone \r, U+0085, U+2028).
+PARITY_ROWS = [
+    ("p1", "python", "import repo_x²\nfrom repo_٣ import a\nimport repo_Éé\nimport repo_模块"),
+    ("p2", "python", "import repo_e\u0301x\n\x1cimport repo_fs\nimport\x1frepo_us"),
+    ("p3", "python", "\u00a0import repo_nbsp\n\u3000from repo_ideo import b\n\u0085import repo_nel"),
+    ("p4", "python", "x = 1\rimport repo_cr\r\nimport repo_crlf\r\nimport\nrepo_nl"),
+    ("p5", "python", "y = 2\u0085import repo_after_nel\nz\u2028import repo_after_ls"),
+    ("j1", "java", "import repo_j³.a;\nimport static repo_ö٣.B;\nimport repo_e\u0301.C;"),
+    ("j2", "java", "\x1dimport repo_gs.a;\nimport\x1estatic\x1erepo_rs.b;\r\nimport repo_r.c;"),
+    ("j3", "java", "int a;\rimport repo_cr.x;\u2028import repo_ls.y;\nimport\nrepo_nl.z;"),
+    ("s1", "js", "require('repo_s²');\nrequire(\x1c\"repo_fs\"\x1f);\nrequire(\u3000'repo_漢字' )"),
+    ("s2", "js", "require('repo_e\u0301');\nrequire(\u0085'repo_nel')\nrequire(\n'repo_nl'\r\n)"),
+]
+
+
+def test_extract_matches_python_re(spark):
+    cf = spark.createDataFrame(PARITY_ROWS, "repo string, lang string, content string")
+    cf = cf.withColumn("sha256", F.sha2(F.col("content"), 256))
+    want = Counter(
+        (repo, ref.strip().lower())
+        for repo, lang, content in PARITY_ROWS
+        for ref in re.findall(PY_PATTERNS[lang], content)
+    )
+    got = Counter((r["repo"], r["ref"]) for r in with_refs(cf).collect())
+    assert got == want
+
+
+def _stamped(spark, stamp):
+    """One good row and one row named `r_bad` carrying `stamp` as its sha256."""
+    rows = [("r_good", "python", "import repo_1"), ("r_bad", "python", "import repo_2")]
+    cf = spark.createDataFrame(rows, "repo string, lang string, content string")
+    bad = F.col("repo") == "r_bad"
+    return cf.withColumn("sha256", F.when(bad, stamp).otherwise(F.sha2(F.col("content"), 256)))
+
+
+@pytest.mark.parametrize("stamp", ["wrong", "null"])
+def test_bad_stamp_fails_loudly(spark, stamp):
+    value = F.sha2(F.lit("other content"), 256) if stamp == "wrong" else F.lit(None)
+    cf = _stamped(spark, value)
+    with pytest.raises(Exception, match="sha256 verification failed for repo r_bad"):
+        with_refs(cf).count()
+    # the --no-verify path extracts without checking
+    assert {r["repo"] for r in with_refs(cf, verify_sha=False).collect()} == {"r_good", "r_bad"}
+
+
+def test_sha_violations_counts_wrong_and_null_stamps(spark):
+    wrong = _stamped(spark, F.sha2(F.lit("other content"), 256))
+    null = _stamped(spark, F.lit(None)).filter(F.col("repo") == "r_bad")
+    assert sha_violations(wrong.unionByName(null)) == 2

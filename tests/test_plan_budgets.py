@@ -4,9 +4,13 @@ Each row runs an operator under its own job group on a fixed graph of at
 most 10 vertices and counts the jobs the group ran before the first
 ``CheckpointManager.save`` (the build) and from then on (the supersteps).
 On a small graph a superstep's cost is its job count, so an extra exchange
-or a stray action shows up here before it shows up in a benchmark."""
+or a stray action shows up here before it shows up in a benchmark. The
+extraction row runs on a 20-file corpus and also bounds the plan's kind:
+no Python stage."""
 
+from pgs_spark.functions.extract import sha_violations, with_refs
 from pgs_spark.operators.pagerank import pagerank
+from pgs_spark.sources.generator import generate_code_files
 from pgs_spark.streaming.checkpoint import CheckpointManager
 from tests.conftest import edges_df
 
@@ -18,6 +22,18 @@ GRAPH = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (5, 0), (5, 6), (6, 7), (7, 5),
 def _group_jobs(spark, group):
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs(spark, group, run):
+    """The jobs `run()` ran, under the job group `group`."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return _group_jobs(spark, group)
 
 
 def _budget(spark, monkeypatch, group, run):
@@ -32,14 +48,7 @@ def _budget(spark, monkeypatch, group, run):
         return out
 
     monkeypatch.setattr(CheckpointManager, "save", counted_save)
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    every = _group_jobs(spark, group)
+    every = _jobs(spark, group, run)
     build = marks[0][0] if marks else every
     return build, [after - before for before, after in marks], every - build
 
@@ -58,3 +67,32 @@ def test_pagerank_job_budget(spark, monkeypatch):
     assert len(build) <= 6, sorted(build)
     assert all(len(s) <= 3 for s in steps), [len(s) for s in steps]
     assert len(after) <= 3 * len(steps)  # nothing runs between the saves
+
+
+PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+
+
+def test_with_refs_runs_no_python(spark, monkeypatch):
+    """Extraction and the sha check are JVM plans: no Python worker, no
+    Arrow transfer. `with_refs(...).count()` runs ≤ 2 jobs (the count's
+    partial and final aggregate)."""
+    cf = generate_code_files(spark, n_repos=5, n_files=20, seed=3).persist()
+    cf.count()
+    plans = []
+    df_type = type(cf)
+    orig = df_type.count
+
+    def planned_count(self):
+        qe = self._jdf.queryExecution()
+        plans.append(qe.executedPlan().toString() + qe.optimizedPlan().toJSON())
+        return orig(self)
+
+    monkeypatch.setattr(df_type, "count", planned_count)
+    jobs = _jobs(spark, "budget/with_refs", lambda: with_refs(cf).count())
+    assert sha_violations(cf) == 0
+    cf.unpersist()
+    assert len(plans) == 2
+    for plan in plans:
+        found = [n for n in PYTHON_NODES if n in plan]
+        assert not found, found
+    assert len(jobs) <= 2, sorted(jobs)

@@ -9,6 +9,7 @@ from pgs_spark.operators.components import connected_components
 from pgs_spark.operators.dag import build_order
 from pgs_spark.operators.hyperball import hyperball
 from pgs_spark.operators.label_propagation import label_propagation
+from pgs_spark.operators.layout import fr_layout
 from pgs_spark.operators.merge import kcore
 from pgs_spark.operators.pagerank import pagerank
 from pgs_spark.operators.traversal import bfs_distances, sssp_distances
@@ -37,6 +38,15 @@ def test_cc_and_triangles_leave_session_unchanged(spark, tmp_path):
     assert triangle_count(spark, edges_df(spark, TWO_CLIQUES)) == 4 + 1
 
     assert _session_state(spark) == before
+
+
+def test_fr_layout_leaves_session_unchanged(spark):
+    """Run in a fresh session, so a view left by an earlier test in the shared
+    one cannot hide a view this call leaves behind."""
+    session = spark.newSession()
+    before = _session_state(session)
+    fr_layout(session, edges_df(session, TWO_CLIQUES), iterations=2).positions.collect()
+    assert _session_state(session) == before
 
 
 # superstep loops (on state.run_supersteps, and PageRank's own), each run on
