@@ -13,10 +13,16 @@ the reference explicitly sorts before order-sensitive steps
 GeneticColoring stopping rule: iterate until conflict count is 0,
 commons/GeneticColoring.java:41-95), with a max-superstep guard.
 
-Superstep state (|V| label rows) runs on ``state.run_supersteps``: one
-parquet snapshot per superstep, the changed-count observed on that write,
-and with a durable ``checkpoint_dir`` a mid-convergence resume (the input
-fingerprint guards cross-input reuse).
+Plan: the symmetric edge table ``sym`` is hash-partitioned on src and
+persisted once. A step looks each edge's labels up in ONE label snapshot
+twice (the neighbour's on dst, the vertex's own on src), votes with
+``groupBy(src, label)`` and takes the argmax with ``groupBy(src)``. While
+the |V| labels fit under ``spark.sql.autoBroadcastJoinThreshold``, both
+lookups share one broadcast and both aggregates run inside sym's
+partitions: two jobs (the broadcast, the snapshot write), no shuffle. Above
+it they fall back to sort-merge joins, which re-shuffle the edge side. The
+loop is ``state.run_supersteps``: a parquet snapshot per superstep with the
+changed-count observed on its write; ``checkpoint_dir`` makes it resumable.
 """
 
 from __future__ import annotations
@@ -51,47 +57,41 @@ def label_propagation(
 
     Default init: label = vertex id (community detection). With `seed` and
     `n_initial_labels`: seeded random labels in [0, n) — the stochasticMerge
-    configuration (nClasses + seed, PGS_Meshing.java:693-700).
-
-    ``weight_col`` switches the vote from neighbor COUNT to neighbor weight
-    SUM (the reference's weighted graphs, PGS_Conversion.java:933) — same
-    deterministic tie-break (max vote, then min label). Integer weights keep
-    the vote exact cross-engine.
+    configuration (nClasses + seed, PGS_Meshing.java:693-700). ``weight_col``
+    votes with the neighbor weight SUM instead of the COUNT (the reference's
+    weighted graphs, PGS_Conversion.java:933), same tie-break; integer weights
+    keep the vote exact cross-engine.
     """
     cols = [weight_col] if weight_col else []
     e = undirected_edges.select("src", "dst", *cols)
-    sym = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols)
-    ).persist()
+    sym = (
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols))
+        .repartition("src")
+        .persist()
+    )
     verts = sym.select(F.col("src").alias("id")).distinct()
+    init = F.col("id")
     if seed is not None and n_initial_labels:
-        labels = verts.select(
-            "id",
-            F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(n_initial_labels)).alias("label"),
-        )
-    else:
-        labels = verts.select("id", F.col("id").alias("label"))
-
+        init = F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(n_initial_labels))
+    labels = verts.select("id", init.alias("label"))
     vote = F.sum(weight_col) if weight_col else F.count("*")
 
     def step(labels: DataFrame, _: int) -> DataFrame:
-        nbr = sym.join(labels, sym.dst == labels.id).select(
-            F.col("src").alias("id"), "label", *cols
+        # one un-renamed `labels`, so one broadcast; left joins build only it
+        # (sym keeps its partitioning) and lose no row: every dst is some src
+        nbr = sym.join(labels, sym.dst == labels.id, "left").select(
+            "src", F.col("label").alias("nl"), *cols
         )
-        counts = nbr.groupBy("id", "label").agg(vote.alias("cnt"))
-        # argmax by (cnt, -label): most frequent, ties to the smallest label.
-        best = (
-            counts.groupBy("id")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("s"))
-            .select("id", (-F.col("s.nl")).alias("new_label"))
+        own = nbr.join(labels, nbr.src == labels.id, "left").select(
+            "src", "nl", F.col("label").alias("own"), *cols
         )
-        # the old label stays in-row, so the changed-count is observed on the
-        # snapshot write itself: no second job, no re-read, no extra join
-        return labels.join(best, "id", "left").select(
-            "id",
-            F.col("label").alias("old_label"),
-            F.coalesce("new_label", "label").alias("label"),
-        )
+        counts = own.groupBy("src", "nl").agg(vote.alias("cnt"), F.max("own").alias("own"))
+        # argmax by (cnt, -label): most frequent, ties to the smallest label;
+        # the old label stays in-row for the changed-count on the write
+        return counts.groupBy("src").agg(
+            F.max(F.struct("cnt", (-F.col("nl")).alias("nl"))).alias("s"),
+            F.max("own").alias("old_label"),
+        ).select(F.col("src").alias("id"), "old_label", (-F.col("s.nl")).alias("label"))
 
     run = run_supersteps(
         spark,

@@ -86,6 +86,62 @@ def test_lpa_resume_after_crash_in_step_1(spark, tmp_path, monkeypatch):
     )
 
 
+# vote ties (0 and 3 each see two labels once), a self-loop at 4, a hub 9
+# with ten leaves and a lone edge; w is an integer weight per edge
+TIES_LOOP_HUB = (
+    [(0, 1), (0, 2), (1, 3), (2, 3), (4, 4), (4, 5)]
+    + [(9, i) for i in range(10, 20)]
+    + [(20, 21)]
+)
+
+
+def _ref_lpa(rows, max_iter, weighted):
+    """Synchronous LPA over the symmetric rows: the vote is the count (or
+    weight sum) per neighbour label, the winner the most votes, then the
+    smallest label."""
+    sym = [(a, b, w) for a, b, w in rows] + [(b, a, w) for a, b, w in rows]
+    labels = {a: a for a, _, _ in sym}
+    for _ in range(max_iter):
+        votes = {}
+        for a, b, w in sym:
+            key = (a, labels[b])
+            votes[key] = votes.get(key, 0) + (w if weighted else 1)
+        new = {v: min(labels, key=lambda lab: (-votes.get((v, lab), 0), lab))
+               for v in labels}
+        if new == labels:
+            break
+        labels = new
+    return labels
+
+
+def test_lpa_without_broadcast_matches(spark):
+    """With ``autoBroadcastJoinThreshold=-1`` the label lookups are
+    sort-merge joins; count votes, weighted votes and seeded init give the
+    same labels as with broadcasts on, and the votes match a reference."""
+    rows = [(a, b, (a * 7 + b * 3) % 5 + 1) for a, b in TIES_LOOP_HUB]
+    e = spark.createDataFrame(rows, "src long, dst long, w long")
+    modes = {"count": {}, "weighted": {"weight_col": "w"},
+             "seeded": {"seed": 1337, "n_initial_labels": 3}}
+
+    def run_all():
+        return {
+            m: {r["id"]: r["label"]
+                for r in label_propagation(spark, e, max_iter=3, **kw).labels.collect()}
+            for m, kw in modes.items()
+        }
+
+    on = run_all()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        off = run_all()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert on == off
+    assert on["count"] == _ref_lpa(rows, 3, weighted=False)
+    assert on["weighted"] == _ref_lpa(rows, 3, weighted=True)
+
+
 # ---------------- triangles ----------------
 
 @pytest.mark.parametrize(

@@ -9,7 +9,11 @@ extraction row runs on a 20-file corpus and also bounds the plan's kind:
 no Python stage."""
 
 from pgs_spark.functions.extract import sha_violations, with_refs
+from pgs_spark.operators.components import connected_components
+from pgs_spark.operators.edges import canonicalize
+from pgs_spark.operators.label_propagation import label_propagation
 from pgs_spark.operators.pagerank import pagerank
+from pgs_spark.operators.triangles import triangle_count
 from pgs_spark.sources.generator import generate_code_files
 from pgs_spark.streaming.checkpoint import CheckpointManager
 from tests.conftest import edges_df
@@ -67,6 +71,84 @@ def test_pagerank_job_budget(spark, monkeypatch):
     assert len(build) <= 6, sorted(build)
     assert all(len(s) <= 3 for s in steps), [len(s) for s in steps]
     assert len(after) <= 3 * len(steps)  # nothing runs between the saves
+
+
+def _plan_nodes(plan):
+    """Node names of a physical plan, AQE wrappers unwrapped. A cached
+    relation's plan is not a child of its scan, so it is not listed."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return _plan_nodes(plan.executedPlan())
+    children = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(children.size()) for n in _plan_nodes(children.apply(i))
+    ]
+
+
+def test_lpa_job_budget(spark, monkeypatch):
+    """Step 0 (sym's partitioning, the init labels) ≤ 4 jobs; each later
+    superstep ≤ 2 (the label broadcast, reused by both lookups, and the
+    snapshot write) and its plan has no shuffle Exchange: the edge side is
+    partitioned once and never moves again."""
+    plans = []
+    orig = CheckpointManager.save
+
+    def planned_save(self, state, iteration, *args, **kwargs):
+        if iteration:
+            plans.append(_plan_nodes(state._jdf.queryExecution().executedPlan()))
+        return orig(self, state, iteration, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointManager, "save", planned_save)
+    und = canonicalize(edges_df(spark, GRAPH))
+    res = []
+    build, steps, after = _budget(
+        spark, monkeypatch, "budget/lpa",
+        lambda: res.append(label_propagation(spark, und, max_iter=4)),
+    )
+    assert len(steps) == res[0].iterations + 1 >= 3  # step 0 is the init
+    assert len(steps[0]) <= 4, sorted(steps[0])
+    assert all(len(s) <= 2 for s in steps[1:]), [len(s) for s in steps]
+    assert len(after) <= 4 + 2 * (len(steps) - 1)
+    for nodes in plans:
+        assert "Exchange" not in nodes and "BroadcastExchange" in nodes, nodes
+
+
+def test_connected_components_job_budget(spark, monkeypatch):
+    """A round is ≤ 8 jobs: its snapshot write and AQE's shuffle stages
+    (8 and 6 here). Nothing runs before the first round or between rounds:
+    no signature or sizing action, no setup pass over the input."""
+    edges = edges_df(spark, GRAPH)
+    res = []
+    build, steps, after = _budget(
+        spark, monkeypatch, "budget/cc",
+        lambda: res.append(connected_components(spark, edges)),
+    )
+    assert len(steps) == res[0].rounds == 2
+    assert not build, sorted(build)
+    assert all(len(s) <= 8 for s in steps), [len(s) for s in steps]
+    assert len(after) == sum(map(len, steps))
+
+
+def test_triangle_count_runs_no_sizing_job(spark, monkeypatch):
+    """On a cached graph the optimizer's size estimate
+    (``optimizedPlan().stats()``) keeps the small-graph plan: 16 jobs, all
+    of them the result's count. No ``ori.count()`` sizing action runs, the
+    fallback taken when the estimate cannot be read."""
+    edges = edges_df(spark, GRAPH + [(0, 3), (1, 3)]).persist()
+    df_type = type(edges)
+    orig = df_type.count
+    counted = []
+    try:
+        edges.count()
+        monkeypatch.setattr(df_type, "count", lambda self: counted.append(self) or orig(self))
+        got = []
+        jobs = _jobs(
+            spark, "budget/triangles", lambda: got.append(triangle_count(spark, edges))
+        )
+    finally:
+        edges.unpersist()
+    assert got == [5]
+    assert len(counted) == 1  # the result's count, nothing before it
+    assert len(jobs) <= 16, sorted(jobs)
 
 
 PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
