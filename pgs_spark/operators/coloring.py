@@ -28,16 +28,20 @@ Plan per round (all joins/aggs, no UDFs — ONE pass over the edge table):
 from ready ids only, so extra rows never join; this is what lets blocked and
 used share one scan instead of three.)
 
-Round state (colored set, ≤|V| rows): localCheckpoint below
-PGS_COLOR_LOCAL_STATE_MAX vertices (default 2M — driver-loop latency
-dominates small graphs, a parquet round-trip per round tripled wall clock),
-parquet snapshots above it (on-heap round state at 20M vertices caused
-multi-second Full-GC pauses — the measured LPA lesson).
+Round state (colored set, ≤|V| rows): localCheckpoint up to
+``LOCAL_STATE_MAX_VERTICES`` (2M), parquet snapshots above it (on-heap round
+state at 20M vertices caused multi-second Full-GC pauses — the measured LPA
+lesson). This loop keeps its own localCheckpoint mode instead of running on
+``state.run_supersteps``' parquet snapshots because on small graphs the
+driver-loop latency dominates: on the ``bench.py`` ``coloring_jp`` leaf (sf0.1,
+58,384 edges, 22 rounds, 4-core host) localCheckpoint state took 18.1–19.5 s
+warm and 27.1–28.7 s cold, parquet state 22.7–23.4 s warm and 33.8–34.8 s
+cold, and keeping the broadcast hints under parquet state did not close the
+gap (24.0–28.5 s warm).
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -45,6 +49,10 @@ from pyspark.sql import functions as F
 
 from pgs_spark.operators.edges import symmetrize
 from pgs_spark.operators.state import make_work_dir, snapshot
+
+#: round state up to this many vertices is localCheckpointed, above it
+#: snapshotted to parquet
+LOCAL_STATE_MAX_VERTICES = 2_000_000
 
 
 def _prio(id_col: Column, seed: int) -> Column:
@@ -101,63 +109,65 @@ def jones_plassmann(
         .join(verts.select(F.col("id").alias("dst"), F.col("p").alias("pd")), "dst")
         .persist()
     )
-    n = verts.count()
-    m = sym_p.count()
-
-    # Size the round shuffles to the DATA, not the session default: JP wall
-    # clock is rounds × per-round stage latency, and on a small graph 32-64
-    # near-empty tasks per stage are pure scheduler overhead (measured 33.6s
-    # → 28.8s at 58k edges with 8 partitions). Grows back to the session
-    # default at ~250k edges/partition — the cluster-scale setting.
+    hi = None
     default_p = spark.conf.get("spark.sql.shuffle.partitions")
-    round_p = max(8, min(int(default_p), m // 250_000 + 8))
-
-    use_local = n <= int(os.environ.get("PGS_COLOR_LOCAL_STATE_MAX", "2000000"))
-
-    def _snap(df: DataFrame, name: str) -> DataFrame:
-        if use_local:
-            # coalesce first: union(prev_checkpoint, new) concatenates
-            # partition lists, so uncoalesced round state grows by ~|parts|
-            # partitions per round — O(rounds²) tasks by convergence
-            return df.coalesce(round_p).localCheckpoint(eager=True)
-        return snapshot(df, work_dir, name)
-
-    limit = fixed_rounds if fixed_rounds is not None else max_rounds
-    cp = None
-    start_round = 0
-    n_colored = 0
-    resumed_converged = False
-    if checkpoint_dir is not None:
-        from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
-
-        cp = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            f"{fingerprint_edges(undirected_edges)}|seed={seed}",
-        )
-        rp = cp.resume_point()
-        if rp is None:
-            cp.clear()  # stale state from a different input/seed — never mix
-            colored = None
-        else:
-            start_round, colored, m = rp
-            n_colored = int(m.get("n_colored", 0))
-            resumed_converged = bool(m.get("converged", False))
-    else:
-        colored = None
-    if colored is None:
-        colored = spark.createDataFrame([], "id long, color long")
-        colored = _snap(colored, "colored_0")
-    history: list[dict] = []
-    rounds = start_round
-    # NOTE: this mutates the SESSION-global shuffle width for the duration of
-    # the loop (restored in finally). The iterative operators assume exclusive
-    # use of the SparkSession while they run — a concurrent query on the same
-    # session would be re-planned at round_p. Round state handed onward is
-    # materialized (checkpoint/snapshot) before the restore, so no lazy plan
-    # escapes with the narrow width.
-    spark.conf.set("spark.sql.shuffle.partitions", str(round_p))
     try:
+        n = verts.count()
+        m = sym_p.count()
+
+        # Size the round shuffles to the DATA, not the session default: JP wall
+        # clock is rounds × per-round stage latency, and on a small graph 32-64
+        # near-empty tasks per stage are pure scheduler overhead (measured 33.6s
+        # → 28.8s at 58k edges with 8 partitions). Grows back to the session
+        # default at ~250k edges/partition — the cluster-scale setting.
+        round_p = max(8, min(int(default_p), m // 250_000 + 8))
+
+        use_local = n <= LOCAL_STATE_MAX_VERTICES
+
+        def _snap(df: DataFrame, name: str) -> DataFrame:
+            if use_local:
+                # coalesce first: union(prev_checkpoint, new) concatenates
+                # partition lists, so uncoalesced round state grows by ~|parts|
+                # partitions per round — O(rounds²) tasks by convergence
+                return df.coalesce(round_p).localCheckpoint(eager=True)
+            return snapshot(df, work_dir, name)
+
+        limit = fixed_rounds if fixed_rounds is not None else max_rounds
+        cp = None
+        start_round = 0
+        n_colored = 0
+        resumed_converged = False
+        if checkpoint_dir is not None:
+            from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
+
+            cp = CheckpointManager(
+                spark,
+                checkpoint_dir,
+                f"{fingerprint_edges(undirected_edges)}|seed={seed}",
+            )
+            rp = cp.resume_point()
+            if rp is None:
+                cp.clear()  # stale state from a different input/seed — never mix
+                colored = None
+            else:
+                start_round, colored, m = rp
+                n_colored = int(m.get("n_colored", 0))
+                resumed_converged = bool(m.get("converged", False))
+        else:
+            colored = None
+        if colored is None:
+            # empty and local: no snapshot, which in localCheckpoint mode
+            # would be a cached RDD outliving a durable run
+            colored = spark.createDataFrame([], "id long, color long")
+        history: list[dict] = []
+        rounds = start_round
+        # NOTE: this mutates the SESSION-global shuffle width for the duration of
+        # the loop (restored in finally). The iterative operators assume exclusive
+        # use of the SparkSession while they run — a concurrent query on the same
+        # session would be re-planned at round_p. Round state handed onward is
+        # materialized (checkpoint/snapshot) before the restore, so no lazy plan
+        # escapes with the narrow width.
+        spark.conf.set("spark.sql.shuffle.partitions", str(round_p))
         for r in range(start_round + 1, limit + 1):
             if resumed_converged:
                 break
@@ -253,19 +263,20 @@ def jones_plassmann(
                 colored = _snap(colored.union(new), f"colored_{r % 2}")
                 hi.unpersist()
                 rounds = r
+        if fixed_rounds is not None:
+            n_colored = colored.count()
+        converged = n_colored >= n
+        out = colored
+        if not converged:
+            out = verts.select("id").join(colored, "id", "left").select(
+                "id", F.coalesce("color", F.lit(-1)).alias("color")
+            )
+        return ColoringResult(out, rounds, converged, history)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", default_p)
-    if fixed_rounds is not None:
-        n_colored = colored.count()
-    converged = n_colored >= n
-    out = colored
-    if not converged:
-        out = verts.select("id").join(colored, "id", "left").select(
-            "id", F.coalesce("color", F.lit(-1)).alias("color")
-        )
-    verts.unpersist()
-    sym_p.unpersist()
-    return ColoringResult(out, rounds, converged, history)
+        for df in (verts, sym_p, hi):
+            if df is not None:
+                df.unpersist()
 
 
 def conflict_count(undirected_edges: DataFrame, colors: DataFrame) -> int:

@@ -14,26 +14,102 @@ smallest strictly-larger neighbor:
                       (direction is strictly increasing in (size, id), so the
                       merge mapping is acyclic — jumps terminate)
 
-Monotone: each round strictly reduces the group count but can never drop
-below k in one round (every candidate folds into some root that survives),
-so the loop converges to ≥ k groups; candidates with no strictly-larger
-neighbor (component maxima) survive too, the AreaMerge behavior for isolated
-islands. Deterministic: every choice is (size, id)-lexicographic, so a fixed
-(rounds, jumps) program is oracle-unrollable — see ``merge_to_k_sql``.
+Monotone: a round never grows the group count and can never drop it below k
+(every candidate folds into some root that survives); a round that merges
+nothing leaves the state unchanged, a fixed point. Candidates with no
+strictly-larger neighbor (component maxima) survive — the AreaMerge behavior
+for isolated islands. Deterministic: every choice is (size, id)-lexicographic,
+so a fixed (rounds, jumps) program is oracle-unrollable — see
+``merge_to_k_sql``.
 
-All relational: sizes groupBy, top-k, group-graph join, per-group struct-min,
-J self-joins for pointer jumping. Round state snapshots to parquet off-heap.
+All relational: top-k, group-graph join, per-group struct-min, J self-joins
+for pointer jumping. A round's state is ONE relation ``(t, a, b)`` holding
+three parts told apart by `t`: the vertex → group rows, the contracted
+group-edge table and each group's size. Each round is one
+``state.run_supersteps`` step — one parquet snapshot, one manifest — and the
+group count is observed on that write.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pgs_spark.operators.state import make_work_dir, snapshot
+from pgs_spark.operators.state import run_supersteps
+from pgs_spark.streaming.checkpoint import fingerprint_edges
+
+# the parts of a round's state relation (t, a, b)
+GROUP, GEDGE, SIZE = 0, 1, 2  # (id, g), (ga, gb) with ga < gb, (g, sz)
+
+
+def _part(state: DataFrame, t: int, a: str, b: str) -> DataFrame:
+    return state.filter(F.col("t") == t).select(F.col("a").alias(a), F.col("b").alias(b))
+
+
+def _state(groups: DataFrame, gedges: DataFrame, sizes: DataFrame) -> DataFrame:
+    return (
+        groups.select(F.lit(GROUP).alias("t"), F.col("id").alias("a"), F.col("g").alias("b"))
+        .union(gedges.select(F.lit(GEDGE), "ga", "gb"))
+        .union(sizes.select(F.lit(SIZE), "g", "sz"))
+    )
+
+
+def _round(state: DataFrame, k: int, jumps: int) -> DataFrame:
+    """One merge round over the (t, a, b) state → the next state."""
+    groups = _part(state, GROUP, "id", "g")
+    gedges = _part(state, GEDGE, "ga", "gb")
+    sizes = _part(state, SIZE, "g", "sz")
+    keep = sizes.orderBy(F.col("sz").desc(), F.col("g").desc()).limit(k)
+    cand = sizes.join(keep.select("g"), "g", "left_anti")
+    # group-level adjacency, both directions, with sizes on both sides
+    # (gedges is canonical loop-free — maintained below; no distinct: the
+    # per-group struct-MIN below is dup-insensitive)
+    gsym = gedges.union(gedges.select(F.col("gb").alias("ga"), F.col("ga").alias("gb")))
+    adj = gsym.join(
+        sizes.select(F.col("g").alias("ga"), F.col("sz").alias("sza")), "ga"
+    ).join(sizes.select(F.col("g").alias("gb"), F.col("sz").alias("szb")), "gb")
+    targets = (
+        adj.join(cand.select(F.col("g").alias("ga")), "ga", "left_semi")
+        .filter(
+            (F.col("szb") > F.col("sza"))
+            | ((F.col("szb") == F.col("sza")) & (F.col("gb") > F.col("ga")))
+        )
+        .groupBy("ga")
+        .agg(F.min(F.struct(F.col("szb"), F.col("gb"))).alias("t"))
+        .select(F.col("ga").alias("g"), F.col("t.gb").alias("tgt"))
+    )
+    # total mapping with identity default, then J pointer jumps
+    mapping = sizes.select("g").join(targets, "g", "left").select(
+        "g", F.coalesce("tgt", F.col("g")).alias("tgt")
+    )
+    for _ in range(jumps):
+        nxt = mapping.select(F.col("g").alias("tgt"), F.col("tgt").alias("tgt2"))
+        mapping = mapping.join(nxt, "tgt").select("g", F.col("tgt2").alias("tgt"))
+    # explicit rename, not `groups.g == mapping.g`: both sides read the same
+    # snapshot, so their `g` attributes can share an exprId and a qualified
+    # condition would degenerate to a trivially-true predicate (cross join)
+    new_groups = groups.join(
+        mapping.select(F.col("g").alias("mg"), "tgt"), F.col("g") == F.col("mg")
+    ).select("id", F.col("tgt").alias("g"))
+    # Group-level edges are CONTRACTED each round: round r's group adjacency
+    # is the image of round r-1's group edges under the merge mapping
+    # (transitivity of contraction), so later rounds join a monotonically
+    # SHRINKING relation instead of the full vertex-level edge table.
+    ma = mapping.select(F.col("g").alias("ga"), F.col("tgt").alias("ta"))
+    mb = mapping.select(F.col("g").alias("gb"), F.col("tgt").alias("tb"))
+    new_gedges = (
+        gedges.join(ma, "ga")
+        .join(mb, "gb")
+        .select(F.least("ta", "tb").alias("ga"), F.greatest("ta", "tb").alias("gb"))
+        .filter(F.col("ga") != F.col("gb"))
+        .distinct()
+    )
+    new_sizes = (
+        sizes.join(mapping, "g").groupBy(F.col("tgt").alias("g")).agg(F.sum("sz").alias("sz"))
+    )
+    return _state(new_groups, new_gedges, new_sizes)
 
 
 @dataclass
@@ -58,227 +134,57 @@ def merge_to_k(
     Starts from singleton groups (every vertex its own group — the
     faces-as-initial-groups start of AreaMerge). `fixed_rounds` runs exactly
     that many rounds (oracle mode); otherwise rounds run until the group
-    count reaches k or stops shrinking.
+    count reaches k or stops shrinking (no group merged: a fixed point, so
+    the result is exact).
+
+    `checkpoint_dir` makes the run DURABLE (``state.run_supersteps``): a
+    restarted call with the same dir, input, k and jumps resumes from the
+    newest round. `history` holds one record per round (`round`,
+    `n_groups`, `seconds`, shuffle bytes); a resumed run's first record is
+    the round it resumed from.
     """
-    work_dir = make_work_dir("pgs_mergek_")
-    edges = undirected_edges.persist()
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
+    ends = undirected_edges.select(F.explode(F.array("src", "dst")).alias("id"))
+    st = ends.agg(F.count("*").alias("ends"), F.countDistinct("id").alias("n")).first()
+    n = st["n"]
+    verts = ends.distinct()
+    if fixed_rounds is None and n <= k:
+        return MergeToKResult(verts.select("id", F.col("id").alias("group")), 0, n)
+    init = _state(
+        verts.select("id", F.col("id").alias("g")),
+        undirected_edges.select(F.col("src").alias("ga"), F.col("dst").alias("gb")),
+        verts.select(F.col("id").alias("g"), F.lit(1).cast("long").alias("sz")),
     )
-    m = edges.count()
 
-    # Same driver-loop latency treatment as Jones-Plassmann: per-round wall
-    # clock is stages x scheduler latency, so size the round shuffles to the
-    # DATA (8 partitions at small |E|, the session default at cluster scale)
-    # and keep round state as coalesced localCheckpoints below a threshold
-    # (parquet round-trips dominate small graphs; off-heap parquet above it).
-    default_p = spark.conf.get("spark.sql.shuffle.partitions")
-    round_p = max(8, min(int(default_p), m // 250_000 + 8))
-    use_local = m <= int(os.environ.get("PGS_MERGEK_LOCAL_STATE_MAX", "2000000"))
+    def done(vals, prev):
+        # an unchanged count means no group merged: a fixed point
+        now = vals["n_groups"]
+        return now <= k or now == (prev["n_groups"] if prev else n)
 
-    def _snap(df: DataFrame, name: str) -> DataFrame:
-        if use_local:
-            return df.coalesce(round_p).localCheckpoint(eager=True)
-        return snapshot(df, work_dir, name)
-
-    # Durable mode (checkpoint_dir): the round state is the PAIR
-    # (groups, gedges). Crash-safe ordering: groups is snapshotted with
-    # manifest=False first, then gedges' save() emits the round's SINGLE
-    # manifest carrying groups_path + n_groups — a crash between the two
-    # writes leaves the previous round's complete manifest as newest, so
-    # resume never sees a half-round. Resume additionally skips (doesn't
-    # wedge on) any manifest missing groups_path — e.g. state written by an
-    # older build with the superseded-manifest crash window.
-    cp = None
-    start_round = 0
-    resumed = None
-    if checkpoint_dir is not None:
-        from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
-
-        cp = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            f"{fingerprint_edges(undirected_edges)}|k={k}|jumps={jumps}",
-        )
-        for mm in reversed(cp.manifests()):
-            if mm.get("input_fingerprint") != cp.fingerprint:
-                break  # different input — all state here is stale
-            met = mm.get("metrics") or {}
-            if "groups_path" not in met or not os.path.isdir(met["groups_path"]):
-                continue  # incomplete pair (crash window) — fall back one round
-            start_round = mm["iteration"]
-            gedges = cp.load(mm)
-            groups = spark.read.parquet(met["groups_path"])
-            n_groups = int(met["n_groups"])
-            resumed = met
-            break
-        if resumed is None:
-            cp.clear()
-    if resumed is None:
-        groups = _snap(verts.select("id", F.col("id").alias("g")), "g_0")
-        # Group-level edge table, CONTRACTED each round: round r's group
-        # adjacency is the image of round r-1's group edges under the merge
-        # mapping (transitivity of contraction), so later rounds join a
-        # monotonically SHRINKING relation instead of re-joining the full
-        # vertex-level edge table against groups every round.
-        gedges = _snap(
-            edges.select(F.col("src").alias("ga"), F.col("dst").alias("gb")), "ge_0"
-        )
-        n_groups = groups.select("g").distinct().count()
-    history: list[dict] = []
-    rounds = start_round
-    limit = fixed_rounds if fixed_rounds is not None else max_rounds
-    # NOTE: this mutates the SESSION-global shuffle width for the duration of
-    # the loop (restored in finally). The iterative operators assume exclusive
-    # use of the SparkSession while they run — a concurrent query on the same
-    # session would be re-planned at round_p. Round state handed onward is
-    # materialized (checkpoint/snapshot) before the restore, so no lazy plan
-    # escapes with the narrow width.
-    spark.conf.set("spark.sql.shuffle.partitions", str(round_p))
-    try:
-        for r in range(start_round + 1, limit + 1):
-            if fixed_rounds is None and n_groups <= k:
-                break
-            # Round state is localCheckpointed (no size stats → planner
-            # estimates defaultSizeInBytes), so every join of the BIG
-            # group-edge relation against the TINY group-level tables
-            # (sizes/cand/targets/mapping, all ≤ n_groups rows) planned as
-            # SortMergeJoin — shuffling the 2|E|-row gsym twice per round
-            # (measured: 3-7s per checkpoint at sf0.1). Under the same
-            # small-graph threshold that picks localCheckpoint state, hint
-            # the group-level side broadcast; parquet-state scale keeps the
-            # shuffle plans.
-            _b = F.broadcast if use_local else (lambda df: df)
-            sizes = groups.groupBy("g").agg(F.count("*").alias("sz"))
-            if use_local:
-                # materialize the ≤n_groups-row table once (persist, NOT a
-                # localCheckpoint — 4 chained checkpoints/round hit the
-                # geometric plan-degradation trap layout.py documents): it
-                # feeds four consumers across this round's jobs (two adj
-                # joins, cand, mapping) and several are broadcast builds —
-                # without this, each build re-runs the groupBy subtree
-                sizes = sizes.persist()
-                sizes.count()
-            keep = sizes.orderBy(F.col("sz").desc(), F.col("g").desc()).limit(k)
-            cand = sizes.join(_b(keep.select("g")), "g", "left_anti")
-            # group-level adjacency, both directions, with sizes on both
-            # sides (gedges is canonical loop-free — maintained below; no
-            # distinct: the per-group struct-MIN below is dup-insensitive)
-            gsym = gedges.union(
-                gedges.select(F.col("gb").alias("ga"), F.col("ga").alias("gb"))
-            )
-            adj = (
-                gsym.join(_b(sizes.select(F.col("g").alias("ga"), F.col("sz").alias("sza"))), "ga")
-                .join(_b(sizes.select(F.col("g").alias("gb"), F.col("sz").alias("szb"))), "gb")
-            )
-            targets = (
-                adj.join(_b(cand.select(F.col("g").alias("ga"))), "ga", "left_semi")
-                .filter(
-                    (F.col("szb") > F.col("sza"))
-                    | ((F.col("szb") == F.col("sza")) & (F.col("gb") > F.col("ga")))
-                )
-                .groupBy("ga")
-                .agg(F.min(F.struct(F.col("szb"), F.col("gb"))).alias("t"))
-                .select(F.col("ga").alias("g"), F.col("t.gb").alias("tgt"))
-            )
-            # total mapping with identity default, then J pointer jumps
-            mapping = sizes.select("g").join(_b(targets), "g", "left").select(
-                "g", F.coalesce("tgt", F.col("g")).alias("tgt")
-            )
-            for _ in range(jumps):
-                nxt = mapping.select(F.col("g").alias("tgt"), F.col("tgt").alias("tgt2"))
-                mapping = mapping.join(_b(nxt), "tgt").select(
-                    "g", F.col("tgt2").alias("tgt")
-                )
-            if use_local:
-                # the resolved mapping feeds three broadcast builds (groups
-                # relabel, ma, mb) — materialize its subtree (which contains
-                # the full adj aggregation) exactly once
-                mapping = mapping.persist()
-                mapping.count()
-            # explicit rename, not `groups.g == mapping.g`: once both sides
-            # are checkpointed their `g` attributes share an exprId and the
-            # qualified condition degenerates to a trivially-true predicate
-            # (cross join) — the rename keeps the equi-join unambiguous
-            new_groups = groups.join(
-                _b(mapping.select(F.col("g").alias("mg"), "tgt")),
-                F.col("g") == F.col("mg"),
-            ).select("id", F.col("tgt").alias("g"))
-            ma = mapping.select(F.col("g").alias("ga"), F.col("tgt").alias("ta"))
-            mb = mapping.select(F.col("g").alias("gb"), F.col("tgt").alias("tb"))
-            new_gedges = (
-                gedges.join(_b(ma), "ga")
-                .join(_b(mb), "gb")
-                .select(
-                    F.least("ta", "tb").alias("ga"),
-                    F.greatest("ta", "tb").alias("gb"),
-                )
-                .filter(F.col("ga") != F.col("gb"))
-                .distinct()
-            )
-            if cp is not None:
-                # groups first, manifest=False: no manifest exists for round r
-                # until BOTH snapshots are on disk (crash → resume at r-1)
-                groups = cp.save(new_groups, r, lineage=False, suffix="g", manifest=False)
-                if fixed_rounds is None:
-                    n_groups = groups.select("g").distinct().count()
-                gedges = cp.save(
-                    new_gedges,
-                    r,
-                    suffix="e",
-                    metrics={
-                        "groups_path": groups._pgs_snapshot_path,
-                        "n_groups": n_groups,
-                        "converged": fixed_rounds is None and n_groups <= k,
-                    },
-                    lineage=False,
-                )
-                _gc_orphan_states(cp)
-            else:
-                groups = _snap(new_groups, f"g_{r % 2}")
-                gedges = _snap(new_gedges, f"ge_{r % 2}")
-                if fixed_rounds is None:
-                    # stop test costs one distinct-count per round — skipped
-                    # in fixed-round (oracle) mode
-                    n_groups = groups.select("g").distinct().count()
-            if use_local:
-                sizes.unpersist()
-                mapping.unpersist()
-            rounds = r
-            if fixed_rounds is None:
-                history.append({"round": r, "n_groups": n_groups})
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default_p)
-    if fixed_rounds is not None:
-        n_groups = groups.select("g").distinct().count()
-    edges.unpersist()
-    return MergeToKResult(groups.select("id", F.col("g").alias("group")), rounds, n_groups, history)
-
-
-
-def _gc_orphan_states(cp, keep_last: int = 2) -> None:
-    """Bounded storage for PAIRED checkpoints: prune() tracks one path per
-    manifest, so the suffix-superseded groups snapshots would leak — drop
-    every state dir not referenced by a surviving manifest's path or
-    groups_path metric."""
-    import json as _json
-    import shutil as _shutil
-
-    cp.prune(keep_last=keep_last)
-    keep = set()
-    for name in os.listdir(cp.dir):
-        if name.startswith("manifest_"):
-            with open(os.path.join(cp.dir, name)) as f:
-                m = _json.load(f)
-            keep.add(os.path.basename(m.get("path", "")))
-            gp = (m.get("metrics") or {}).get("groups_path", "")
-            if gp:
-                keep.add(os.path.basename(gp))
-    for name in os.listdir(cp.dir):
-        if name.startswith("state_") and name not in keep:
-            _shutil.rmtree(os.path.join(cp.dir, name), ignore_errors=True)
+    # Shuffle width sized to the DATA (8 partitions at small |E|, the
+    # session default at cluster scale): per-round wall clock on a small
+    # graph is stages × scheduler latency.
+    default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    round_p = max(8, min(default_p, st["ends"] // 500_000 + 8))
+    run = run_supersteps(
+        spark,
+        init,
+        lambda s, _: _round(s, k, jumps),
+        fixed_rounds if fixed_rounds is not None else max_rounds,
+        observe=[F.count(F.when(F.col("t") == SIZE, 1)).alias("n_groups")],
+        done=done if fixed_rounds is None else None,
+        key="round",
+        checkpoint_dir=checkpoint_dir,
+        # `state=tagged`: a directory written in the older paired-snapshot
+        # layout never matches, so it is cleared instead of misread
+        fingerprint=lambda: (
+            f"{fingerprint_edges(undirected_edges)}|k={k}|jumps={jumps}|state=tagged"
+        ),
+        save_init=True,
+        conf={"spark.sql.shuffle.partitions": str(round_p)},
+    )
+    groups = _part(run.state, GROUP, "id", "group")
+    n_groups = run.history[-1]["n_groups"] if run.history else n
+    return MergeToKResult(groups, run.steps, n_groups, run.history)
 
 
 def merge_to_k_sql(edges_sql: str, k: int, rounds: int, jumps: int = 3) -> str:

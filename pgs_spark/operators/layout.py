@@ -22,25 +22,42 @@ output rounding at gate iteration counts.
 
 Scale: per iteration = one 3×3 self-equi-join (shuffle on cell ids; cells
 re-derived each iteration from moving positions) + one edge join + two
-groupBy aggregations. State is (id, x, y) only, snapshotted per iteration
-to off-heap parquet (state.py); no driver-side collect of positions. At 100 TB the repulsion join is the same bucketed-neighbor plan
-the dedup/ANN operators already run at that shape.
+groupBy aggregations. State is (id, x, y) only; each iteration is one
+``state.run_supersteps`` step, an off-heap parquet snapshot, so the plan
+stays flat (a ~20-deep localCheckpoint chain under this self-join degraded
+geometrically: ×2.5/iteration past iteration ~18 on Spark 4.1.2). No
+driver-side collect of positions. At 100 TB the repulsion join is the same
+bucketed-neighbor plan the dedup/ANN operators already run at that shape.
 """
 
 from __future__ import annotations
 
 import math
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pgs_spark.operators.edges import symmetrize
-from pgs_spark.operators.state import make_work_dir, snapshot
+from pgs_spark.operators.state import run_supersteps
+from pgs_spark.streaming.checkpoint import fingerprint_edges
 
 #: guard for coincident points in the repulsion denominator (both engines)
 _EPS_D2 = 1e-12
+
+
+def _loop_conf(spark: SparkSession, rows: int) -> tuple[int, dict]:
+    """(round_p, the loop's session settings): the shuffle width sized to
+    the DATA (8 partitions on a small graph, the session default at cluster
+    scale), and AQE off — its per-exchange re-planning adds jobs to every
+    superstep, overhead on a fixed-shape tiny-state loop; the static planner
+    already broadcasts the position side under the 64MB threshold."""
+    default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    round_p = max(8, min(default_p, rows // 250_000 + 8))
+    return round_p, {
+        "spark.sql.shuffle.partitions": str(round_p),
+        "spark.sql.adaptive.enabled": "false",
+    }
 
 
 def _hash_unit(id_col, axis: str, seed: int):
@@ -74,17 +91,16 @@ def fr_layout(
     linearly cooling temperature t_i = (width/10)·(1 − (i−1)/iterations);
     positions clamped to [0, width]. Deterministic for a given (graph, seed).
 
-    `checkpoint_dir` enables DURABLE resume (CheckpointManager manifests,
-    same treatment as pagerank/components): the loop already snapshots
-    positions to parquet every iteration, so the durable path re-routes that
-    exact write through cp.save — the only added cost is one manifest JSON
-    per iteration. A restarted run with the same (graph, iterations, seed,
-    width) fingerprint resumes at the newest manifest and — the whole
-    recurrence being a fixed deterministic program — finishes with the same
-    positions as an uninterrupted run to float-summation noise (~1e-12; the
-    shuffle merge-order caveat that applies between ANY two runs), i.e.
-    identical at the gate's 6dp rounding (the reference's seeded
-    50-iteration contract, PGS_Conversion.java:977-1004).
+    `checkpoint_dir` enables DURABLE resume (``state.run_supersteps``): a
+    restarted run with the same (graph, iterations, seed, width) fingerprint
+    resumes at the newest manifest and — the whole recurrence being a fixed
+    deterministic program — finishes with the same positions as an
+    uninterrupted run to float-summation noise (~1e-12; the shuffle
+    merge-order caveat that applies between ANY two runs), i.e. identical
+    at the gate's 6dp rounding (the reference's seeded 50-iteration
+    contract, PGS_Conversion.java:977-1004). `history` holds one record per
+    iteration (`iteration`, `seconds`, shuffle bytes); a resumed run's
+    first record is the iteration it resumed from.
 
     `run_budget` caps the supersteps executed by THIS invocation (the
     time-budgeted-chunk pattern for hours-long layouts at cluster scale);
@@ -101,7 +117,6 @@ def fr_layout(
     sym0 = symmetrize(undirected_edges)
     verts = sym0.select(F.col("src").alias("id")).distinct().persist()
     n = verts.count()
-    m = sym0.count()
     if n == 0:
         verts.unpersist()
         return LayoutResult(
@@ -114,92 +129,39 @@ def fr_layout(
     # spanner.py's 1/sqrt(n) threshold.
     k = width / math.sqrt(float(n))
     r_cut = 2.0 * k
-
-    default_p = spark.conf.get("spark.sql.shuffle.partitions")
-    round_p = max(8, min(int(default_p), m // 250_000 + 8))
+    round_p, conf = _loop_conf(spark, sym0.count())
     # width the persisted dart table like the round shuffles: the attraction
     # scan touches it every superstep, and 64 near-empty partitions are pure
     # task-launch overhead on a small graph (the coloring lesson)
     sym = sym0.repartition(round_p).persist()
-
-    # Iteration state goes to PARQUET snapshots (state.py), not chained
-    # localCheckpoints: a ~20-deep localCheckpoint chain under this
-    # self-join degrades geometrically (measured ×2.5/iteration past iter
-    # ~18 on Spark 4.1.2 — 0.7s → 113s by iter 23 on a SEVEN-row graph),
-    # while parquet round-trips stay flat for 40+ iterations. Off-heap
-    # state is also the engine's cluster-scale recipe (the 20M-vertex
-    # Full-GC lesson in state.py).
-    cp = None
-    start_it = 0
-    if checkpoint_dir is not None:
-        from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
-
-        cp = CheckpointManager(
-            spark,
-            checkpoint_dir,
-            f"{fingerprint_edges(sym0)}|it={iterations}|seed={seed}|w={width!r}"
-            + ("|init=custom" if init_positions is not None else ""),
+    init = (
+        init_positions.select("id", "x", "y")
+        if init_positions is not None
+        else verts.select(
+            "id",
+            (_hash_unit(F.col("id"), "x", seed) * width).alias("x"),
+            (_hash_unit(F.col("id"), "y", seed) * width).alias("y"),
         )
-        rp = cp.resume_point()
-        if rp is None:
-            cp.clear()
-        else:
-            start_it, pos, _ = rp
+    )
 
-    work_dir = make_work_dir("pgs_fr_")
-    if start_it == 0:
-        init = (
-            init_positions.select("id", "x", "y")
-            if init_positions is not None
-            else verts.select(
-                "id",
-                (_hash_unit(F.col("id"), "x", seed) * width).alias("x"),
-                (_hash_unit(F.col("id"), "y", seed) * width).alias("y"),
-            )
-        )
-        pos = snapshot(init.coalesce(round_p), work_dir, "pos_0")
+    def step(pos: DataFrame, it: int) -> DataFrame:
+        t = (width / 10.0) * (1.0 - (it - 1) / float(iterations))
+        return _fr_iteration(sym, pos, k, r_cut, t, width).coalesce(round_p)
 
-    history: list[dict] = []
-    # NOTE: session-global shuffle width + AQE off for the loop (restored in
-    # finally; same exclusive-session assumption as the other iterative
-    # operators). AQE's per-exchange re-planning adds jobs/stages to every
-    # superstep — pure overhead on a fixed-shape tiny-state loop; the static
-    # planner already broadcasts the position side via the 64MB threshold.
-    default_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(round_p))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    done_it = start_it
-    try:
-        for it in range(start_it + 1, iterations + 1):
-            it_t0 = time.time()
-            t = (width / 10.0) * (1.0 - (it - 1) / float(iterations))
-            pos_new = _fr_iteration(sym, pos, k, r_cut, t, width)
-            if cp is not None:
-                pos = cp.save(
-                    pos_new.coalesce(round_p), it, lineage=False,
-                    metrics={"temperature": t},
-                )
-                cp.prune(keep_last=2)
-            else:
-                pos = snapshot(pos_new.coalesce(round_p), work_dir, f"pos_{it % 2}")
-            # snapshot/save materialize the superstep, so this wall time is
-            # the real per-iteration cost (the clump bench reads it)
-            history.append(
-                {
-                    "iteration": it,
-                    "temperature": t,
-                    "seconds": round(time.time() - it_t0, 3),
-                }
-            )
-            done_it = it
-            if run_budget is not None and it - start_it >= run_budget:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default_p)
-        spark.conf.set("spark.sql.adaptive.enabled", default_aqe)
-    sym.unpersist()
-    verts.unpersist()
-    return LayoutResult(pos, done_it, history)
+    run = run_supersteps(
+        spark,
+        init.coalesce(round_p),
+        step,
+        iterations,
+        checkpoint_dir=checkpoint_dir,
+        fingerprint=lambda: f"{fingerprint_edges(sym0)}|it={iterations}|seed={seed}|w={width!r}"
+        + ("|init=custom" if init_positions is not None else ""),
+        save_init=True,
+        persisted=[sym, verts],
+        conf=conf,
+        budget=run_budget,
+    )
+    return LayoutResult(run.state, run.steps, run.history)
 
 
 def _fr_iteration_sql(k: float, r_cut: float, t: float, width: float) -> str:
@@ -395,11 +357,10 @@ def repulsion_circle_pack(
     Fixed-program + deterministic → DuckDB-oracle-checkable
     (`circle_pack_sql` unrolls the identical recurrence).
 
-    `checkpoint_dir` enables durable resume exactly as in `fr_layout`: the
-    per-iteration parquet snapshot is re-routed through CheckpointManager
-    (only a manifest JSON is added), keyed on a content fingerprint of the
-    circle set + iteration count; a resumed run matches an uninterrupted one
-    to float-summation noise (identical at the gate's 6dp rounding).
+    `checkpoint_dir` and `run_budget` enable durable, chunked runs exactly
+    as in `fr_layout`, keyed on a content fingerprint of the circle set +
+    iteration count; a resumed run matches an uninterrupted one to
+    float-summation noise (identical at the gate's 6dp rounding).
     """
     pts = circles.select(
         "id",
@@ -413,95 +374,73 @@ def repulsion_circle_pack(
             spark.createDataFrame([], "id long, x double, y double"), 0
         )
     cell = 2.0 * float(stats["rmax"])
+    round_p, conf = _loop_conf(spark, int(stats["n"]))
+    offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 
-    default_p = spark.conf.get("spark.sql.shuffle.partitions")
-    round_p = max(8, min(int(default_p), int(stats["n"]) // 250_000 + 8))
-    default_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    def step(pos: DataFrame, _: int) -> DataFrame:
+        cells = pos.select(
+            "id", "x", "y", "r",
+            F.floor(F.col("x") / cell).alias("cx"),
+            F.floor(F.col("y") / cell).alias("cy"),
+        )
+        probe = cells.select(
+            "id", "x", "y", "r",
+            F.explode(
+                F.array(*[
+                    F.struct(
+                        (F.col("cx") + dx).alias("cx"),
+                        (F.col("cy") + dy).alias("cy"),
+                    )
+                    for dx, dy in offsets
+                ])
+            ).alias("c"),
+        ).select("id", "x", "y", "r", "c.cx", "c.cy")
+        other = cells.select(
+            F.col("id").alias("oid"), F.col("x").alias("ox"),
+            F.col("y").alias("oy"), F.col("r").alias("orr"), "cx", "cy",
+        )
+        dx_ = F.col("x") - F.col("ox")
+        dy_ = F.col("y") - F.col("oy")
+        d2 = dx_ * dx_ + dy_ * dy_
+        rsum = F.col("r") + F.col("orr")
+        d = F.sqrt(d2)
+        push = (rsum - d) * F.lit(0.5) / d  # per-axis factor on Δ
+        disp = (
+            probe.join(other, ["cx", "cy"])
+            .filter(F.col("id") != F.col("oid"))
+            .filter((d2 < rsum * rsum) & (d2 > F.lit(_EPS_D2)))
+            .groupBy("id")
+            .agg(
+                F.sum(dx_ * push).alias("dx"),
+                F.sum(dy_ * push).alias("dy"),
+            )
+        )
+        return pos.join(disp, "id", "left").select(
+            "id",
+            (F.col("x") + F.coalesce("dx", F.lit(0.0))).alias("x"),
+            (F.col("y") + F.coalesce("dy", F.lit(0.0))).alias("y"),
+            "r",
+        ).coalesce(round_p)
 
-    cp = None
-    start_it = 0
-    if checkpoint_dir is not None:
-        from pgs_spark.streaming.checkpoint import CheckpointManager
-
-        fp_row = pts.select(
+    def fingerprint() -> str:
+        row = pts.select(
             F.count("*").alias("n"),
             F.bit_xor(F.xxhash64("id", "x", "y", "r")).alias("h"),
         ).first()
-        cp = CheckpointManager(
-            spark, checkpoint_dir, f"{fp_row['n']}:{fp_row['h']}|it={iterations}"
-        )
-        rp = cp.resume_point()
-        if rp is None:
-            cp.clear()
-        else:
-            start_it, pos, _ = rp
+        return f"{row['n']}:{row['h']}|it={iterations}"
 
-    work_dir = make_work_dir("pgs_pack_")
-    if start_it == 0:
-        pos = snapshot(pts.coalesce(round_p), work_dir, "pack_0")
-    history: list[dict] = []
-    offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    spark.conf.set("spark.sql.shuffle.partitions", str(round_p))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    done_it = start_it
-    try:
-        for it in range(start_it + 1, iterations + 1):
-            cells = pos.select(
-                "id", "x", "y", "r",
-                F.floor(F.col("x") / cell).alias("cx"),
-                F.floor(F.col("y") / cell).alias("cy"),
-            )
-            probe = cells.select(
-                "id", "x", "y", "r",
-                F.explode(
-                    F.array(*[
-                        F.struct(
-                            (F.col("cx") + dx).alias("cx"),
-                            (F.col("cy") + dy).alias("cy"),
-                        )
-                        for dx, dy in offsets
-                    ])
-                ).alias("c"),
-            ).select("id", "x", "y", "r", "c.cx", "c.cy")
-            other = cells.select(
-                F.col("id").alias("oid"), F.col("x").alias("ox"),
-                F.col("y").alias("oy"), F.col("r").alias("orr"), "cx", "cy",
-            )
-            dx_ = F.col("x") - F.col("ox")
-            dy_ = F.col("y") - F.col("oy")
-            d2 = dx_ * dx_ + dy_ * dy_
-            rsum = F.col("r") + F.col("orr")
-            d = F.sqrt(d2)
-            push = (rsum - d) * F.lit(0.5) / d  # per-axis factor on Δ
-            disp = (
-                probe.join(other, ["cx", "cy"])
-                .filter(F.col("id") != F.col("oid"))
-                .filter((d2 < rsum * rsum) & (d2 > F.lit(_EPS_D2)))
-                .groupBy("id")
-                .agg(
-                    F.sum(dx_ * push).alias("dx"),
-                    F.sum(dy_ * push).alias("dy"),
-                )
-            )
-            moved = pos.join(disp, "id", "left").select(
-                "id",
-                (F.col("x") + F.coalesce("dx", F.lit(0.0))).alias("x"),
-                (F.col("y") + F.coalesce("dy", F.lit(0.0))).alias("y"),
-                "r",
-            )
-            if cp is not None:
-                pos = cp.save(moved.coalesce(round_p), it, lineage=False)
-                cp.prune(keep_last=2)
-            else:
-                pos = snapshot(moved.coalesce(round_p), work_dir, f"pack_{it % 2}")
-            history.append({"iteration": it})
-            done_it = it
-            if run_budget is not None and it - start_it >= run_budget:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default_p)
-        spark.conf.set("spark.sql.adaptive.enabled", default_aqe)
-    return LayoutResult(pos.select("id", "x", "y"), done_it, history)
+    run = run_supersteps(
+        spark,
+        pts.coalesce(round_p),
+        step,
+        iterations,
+        checkpoint_dir=checkpoint_dir,
+        fingerprint=fingerprint,
+        save_init=True,
+        conf=conf,
+        budget=run_budget,
+    )
+    return LayoutResult(run.state.select("id", "x", "y"), run.steps, run.history)
 
 
 def circle_pack_sql(circles_sql: str, iterations: int) -> str:

@@ -11,7 +11,8 @@ and — with a manifest — survives a driver restart.
 ``run_supersteps`` is the one superstep loop — the "compute all, then flip"
 barrier of the reference's mesh smoothing (commons/PMesh.java:237-270) as an
 immutable snapshot swap — owning directory, resume, convergence observation,
-manifest, history record and cleanup for every operator that runs on it.
+manifest, history record, scoped session settings and cleanup for every
+operator that runs on it.
 """
 
 from __future__ import annotations
@@ -76,6 +77,8 @@ def run_supersteps(
     fingerprint: Callable[[], str] | None = None,
     save_init: bool = False,
     persisted: Sequence[DataFrame] = (),
+    conf: dict[str, str] | None = None,
+    budget: int | None = None,
 ) -> Supersteps:
     """Run ``state_k = step(state_{k-1}, k)`` for k = 1..max_steps, stopping
     once ``done(observed_k, observed_{k-1})`` holds (None: fixed rounds; the
@@ -93,10 +96,18 @@ def run_supersteps(
     With `checkpoint_dir` the run is DURABLE: manifests carry partition
     lineage and the input `fingerprint()`; a rerun resumes from the newest
     manifest (history starting with it) or clears the dir on a fingerprint
-    mismatch. Otherwise snapshots go to an ephemeral work dir. The
-    `persisted` static inputs are unpersisted on return or failure."""
+    mismatch. Otherwise snapshots go to an ephemeral work dir. `budget`
+    caps the steps THIS call runs (a durable run continues on the next
+    call). The session settings in `conf` hold for the run — the session is
+    assumed exclusive meanwhile: a concurrent query on it would be planned
+    under them — and, like the `persisted` static inputs (unpersisted), are
+    restored on return or failure."""
     durable = checkpoint_dir is not None
+    conf = conf or {}
+    saved = {name: spark.conf.get(name) for name in conf}
     try:
+        for name, value in conf.items():
+            spark.conf.set(name, value)
         cp = CheckpointManager(
             spark,
             checkpoint_dir if durable else make_work_dir("pgs_steps_"),
@@ -113,8 +124,9 @@ def run_supersteps(
             cp.clear()  # stale state from a different input — never mix
             if save_init:
                 state = cp.save(init, 0, lineage=durable)
+        stop = max_steps if budget is None else min(max_steps, k + budget)
 
-        while not converged and k < max_steps:
+        while not converged and k < stop:
             k += 1
             t0, sb0 = time.time(), shuffle_bytes(spark)
             obs = Observation() if observe else None
@@ -145,5 +157,7 @@ def run_supersteps(
             prev = vals
         return Supersteps(state, k, converged, history)
     finally:
+        for name, value in saved.items():
+            spark.conf.set(name, value)
         for df in persisted:
             df.unpersist()

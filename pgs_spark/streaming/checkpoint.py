@@ -44,7 +44,6 @@ class CheckpointManager:
         lineage: bool = True,
         suffix: str = "",
         metrics_fn=None,
-        manifest: bool = True,
     ) -> DataFrame:
         """Persist one superstep's vertex state; returns the re-read DataFrame
         (flat lineage, with its parquet path on `_pgs_snapshot_path`).
@@ -53,13 +52,8 @@ class CheckpointManager:
         extra job). `suffix` distinguishes a sub-step snapshot of the same
         iteration (e.g. a λ-extrapolation jump); NOTE the manifest filename
         does NOT carry the suffix, so a suffixed save SUPERSEDES (overwrites)
-        the plain manifest of the same iteration — intentional for
-        sub-step-replaces-step semantics (λ jumps), hazardous for
-        independent sub-snapshots. Multi-state iterations should write the
-        secondary state with ``manifest=False`` FIRST and let the final
-        `save()` emit the one manifest referencing both paths, so a crash
-        between the two writes never publishes a half-round manifest.
-        `metrics_fn` (no-arg callable → dict) is evaluated AFTER
+        the plain manifest of the same iteration — sub-step-replaces-step
+        semantics. `metrics_fn` (no-arg callable → dict) is evaluated AFTER
         the parquet write action — the hook for Observation metrics that ride
         the write job — and its result is merged over `metrics`, so observed
         values land in the same manifest as the partition lineage without a
@@ -70,8 +64,6 @@ class CheckpointManager:
         # footer-inference (~0.12s), which a superstep loop pays every round
         reread = self.spark.read.schema(state.schema).parquet(path)
         reread._pgs_snapshot_path = path
-        if not manifest:
-            return reread
         if metrics_fn is not None:
             metrics = {**(metrics or {}), **(metrics_fn() or {})}
         part_rows = []
@@ -95,9 +87,7 @@ class CheckpointManager:
         """Emit `manifest_<iteration>.json`. The filename deliberately drops
         `suffix`: a suffixed manifest OVERWRITES the plain manifest of the
         same iteration (supersede semantics — the suffixed state replaces the
-        step). Callers that need both snapshots of an iteration recoverable
-        must put the secondary path in `metrics` of ONE manifest (see
-        `save(manifest=False)`), not write two manifests."""
+        step)."""
         manifest = {
             "iteration": iteration,
             "path": os.path.join(self.dir, f"state_{iteration:05d}{suffix}"),
@@ -130,20 +120,6 @@ class CheckpointManager:
             return None
         with open(os.path.join(self.dir, manifests[-1])) as f:
             return json.load(f)
-
-    def manifests(self) -> list[dict]:
-        """All manifest dicts, oldest → newest (filename order). Lets callers
-        fall back past an incomplete newest manifest (e.g. a crash between a
-        pair of per-iteration snapshots) to the last complete one."""
-        if not os.path.isdir(self.dir):
-            return []
-        out = []
-        for n in sorted(
-            n for n in os.listdir(self.dir) if n.startswith("manifest_") and n.endswith(".json")
-        ):
-            with open(os.path.join(self.dir, n)) as f:
-                out.append(json.load(f))
-        return out
 
     def load(self, manifest: dict) -> DataFrame:
         return self.spark.read.parquet(manifest["path"])

@@ -21,12 +21,16 @@ def test_contracts_to_target(spark):
 
 def test_disconnected_components_never_merge(spark):
     """Groups only fold into NEIGHBORS — the two cliques must stay separate
-    even when k=1 (the AreaMerge island behavior)."""
+    even when k=1 (the AreaMerge island behavior). Round 1 folds each clique
+    onto its root; round 2 merges nothing, so the run stops there instead of
+    running all 8 rounds."""
     e = edges_df(spark, TWO_CLIQUES)
     res = merge_to_k(spark, e, k=1, max_rounds=8)
     groups = {r["group"] for r in res.groups.collect()}
     assert res.n_groups == 2  # one per clique; cross-component merge impossible
     assert groups == {3, 12}  # each clique folds onto its (size,id)-max root
+    assert res.rounds == 2
+    assert [(h["round"], h["n_groups"]) for h in res.history] == [(1, 2), (2, 2)]
 
 
 def test_deterministic_across_runs(spark):
@@ -38,8 +42,8 @@ def test_deterministic_across_runs(spark):
 
 
 def test_merge_to_k_checkpoint_resume(spark, tmp_path):
-    """Durable paired-state resume: interrupt after 1 round, resume → same
-    grouping as an uninterrupted run (the merge program is deterministic)."""
+    """Durable resume: interrupt after 1 round, resume → same grouping as an
+    uninterrupted run (the merge program is deterministic)."""
     from pgs_spark.operators.contraction import merge_to_k
 
     pairs = random_graph(80, 0.06, seed=21)
@@ -53,8 +57,9 @@ def test_merge_to_k_checkpoint_resume(spark, tmp_path):
     a = {r["id"]: r["group"] for r in resumed.groups.collect()}
     b = {r["id"]: r["group"] for r in straight.groups.collect()}
     assert a == b
-    # resume skipped round 1
-    assert all(h["round"] >= 2 for h in resumed.history)
+    # resume skipped round 1: its record is the resumed-from manifest
+    assert resumed.history[0]["round"] == 1
+    assert all(h["round"] >= 2 for h in resumed.history[1:])
     # converged checkpoint short-circuits a third call
     again = merge_to_k(spark, e, k=5, max_rounds=8, checkpoint_dir=cp)
     assert {r["id"]: r["group"] for r in again.groups.collect()} == b

@@ -128,16 +128,18 @@ def test_layout_checkpoint_resume(spark, tmp_path):
     assert part.iterations == 3
     resumed = fr_layout(spark, e, iterations=8, seed=1337, checkpoint_dir=ck)
     assert resumed.iterations == 8
-    assert all(h["iteration"] >= 4 for h in resumed.history)  # skipped 1-3
+    # skipped 1-3: the first record is the resumed-from manifest
+    assert [h["iteration"] for h in resumed.history] == [3, 4, 5, 6, 7, 8]
     straight = fr_layout(spark, e, iterations=8, seed=1337)
     pr = {r["id"]: (r["x"], r["y"]) for r in resumed.positions.collect()}
     ps = {r["id"]: (r["x"], r["y"]) for r in straight.positions.collect()}
     assert set(pr) == set(ps)
     ids = sorted(pr)
     assert np.allclose([pr[i] for i in ids], [ps[i] for i in ids], atol=1e-12, rtol=0)
-    # a completed checkpoint short-circuits: third call runs zero supersteps
+    # a completed checkpoint short-circuits: third call runs zero supersteps,
+    # its history is the resumed-from record alone
     again = fr_layout(spark, e, iterations=8, seed=1337, checkpoint_dir=ck)
-    assert len(again.history) == 0
+    assert [h["iteration"] for h in again.history] == [8]
     pa = {r["id"]: (r["x"], r["y"]) for r in again.positions.collect()}
     assert pa == pr  # exact: same parquet snapshot read back
     # different fingerprint (seed) must NOT resume from this state

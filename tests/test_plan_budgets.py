@@ -8,10 +8,14 @@ or a stray action shows up here before it shows up in a benchmark. The
 extraction row runs on a 20-file corpus and also bounds the plan's kind:
 no Python stage."""
 
+from pyspark.sql import functions as F
+
 from pgs_spark.functions.extract import sha_violations, with_refs
 from pgs_spark.operators.components import connected_components
+from pgs_spark.operators.contraction import merge_to_k
 from pgs_spark.operators.edges import canonicalize
 from pgs_spark.operators.label_propagation import label_propagation
+from pgs_spark.operators.layout import fr_layout, repulsion_circle_pack
 from pgs_spark.operators.pagerank import pagerank
 from pgs_spark.operators.triangles import triangle_count
 from pgs_spark.sources.generator import generate_code_files
@@ -125,6 +129,65 @@ def test_connected_components_job_budget(spark, monkeypatch):
     assert len(steps) == res[0].rounds == 2
     assert not build, sorted(build)
     assert all(len(s) <= 8 for s in steps), [len(s) for s in steps]
+    assert len(after) == sum(map(len, steps))
+
+
+def test_merge_to_k_job_budget(spark, monkeypatch):
+    """Build ≤ 4 jobs (one aggregate for the edge and vertex counts), the
+    initial state's write ≤ 3 and each round ≤ 20 (19, 20 and 17 measured:
+    AQE runs each shuffle and broadcast stage of the round's group-level
+    joins as its own job, then the snapshot write). The group count rides
+    the write, so nothing runs between rounds; round 3 merges nothing and
+    ends the run."""
+    und = canonicalize(edges_df(spark, GRAPH))
+    res = []
+    build, steps, after = _budget(
+        spark, monkeypatch, "budget/merge_to_k",
+        lambda: res.append(merge_to_k(spark, und, k=2, max_rounds=6)),
+    )
+    assert res[0].rounds == 3 and len(steps) == 4  # step 0 is the init
+    assert [h["n_groups"] for h in res[0].history] == [4, 3, 3]
+    assert len(build) <= 4, sorted(build)
+    assert len(steps[0]) <= 3, sorted(steps[0])
+    assert all(len(s) <= 20 for s in steps[1:]), [len(s) for s in steps]
+    assert len(after) == sum(map(len, steps))
+
+
+def test_fr_layout_job_budget(spark, monkeypatch):
+    """Build ≤ 8 jobs (the vertex and dart counts), the initial positions'
+    write 1, each iteration ≤ 4 (AQE is off in the loop: the position
+    broadcasts, the force aggregate and the snapshot write); nothing runs
+    between the saves."""
+    und = canonicalize(edges_df(spark, GRAPH))
+    res = []
+    build, steps, after = _budget(
+        spark, monkeypatch, "budget/fr_layout",
+        lambda: res.append(fr_layout(spark, und, iterations=4)),
+    )
+    assert res[0].iterations == 4 and len(steps) == 5
+    assert len(build) <= 8, sorted(build)
+    assert len(steps[0]) <= 1, sorted(steps[0])
+    assert all(len(s) <= 4 for s in steps[1:]), [len(s) for s in steps]
+    assert len(after) == sum(map(len, steps))
+
+
+def test_circle_pack_job_budget(spark, monkeypatch):
+    """Build ≤ 3 jobs (one count/max(r) row), the initial write 1, each
+    iteration ≤ 3; nothing runs between the saves."""
+    und = canonicalize(edges_df(spark, GRAPH))
+    circles = und.select(
+        F.col("src").alias("id"), F.col("src").cast("double").alias("x"),
+        F.lit(0.0).alias("y"), F.lit(0.6).alias("r"),
+    )
+    res = []
+    build, steps, after = _budget(
+        spark, monkeypatch, "budget/circle_pack",
+        lambda: res.append(repulsion_circle_pack(spark, circles, iterations=4)),
+    )
+    assert res[0].iterations == 4 and len(steps) == 5
+    assert len(build) <= 3, sorted(build)
+    assert len(steps[0]) <= 1, sorted(steps[0])
+    assert all(len(s) <= 3 for s in steps[1:]), [len(s) for s in steps]
     assert len(after) == sum(map(len, steps))
 
 
