@@ -28,10 +28,11 @@ Plan per round (all joins/aggs, no UDFs — ONE pass over the edge table):
 from ready ids only, so extra rows never join; this is what lets blocked and
 used share one scan instead of three.)
 
-Round state (colored set, ≤|V| rows): localCheckpoint up to
-``LOCAL_STATE_MAX_VERTICES`` (2M), parquet snapshots above it (on-heap round
-state at 20M vertices caused multi-second Full-GC pauses — the measured LPA
-lesson). This loop keeps its own localCheckpoint mode instead of running on
+Round state (colored set, ≤|V| rows) goes through one ``CheckpointManager``:
+an ephemeral run up to ``LOCAL_STATE_MAX_VERTICES`` (2M) holds each round as
+a DISK_ONLY local checkpoint (the two newest held, the rest released) and
+writes its result once to parquet; larger and durable runs write a parquet
+snapshot per round. This loop keeps local rounds instead of running on
 ``state.run_supersteps``' parquet snapshots because on small graphs the
 driver-loop latency dominates: on the ``bench.py`` ``coloring_jp`` leaf (sf0.1,
 58,384 edges, 22 rounds, 4-core host) localCheckpoint state took 18.1–19.5 s
@@ -44,14 +45,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pgs_spark.operators.edges import symmetrize
-from pgs_spark.operators.state import make_work_dir, snapshot
+from pgs_spark.operators.state import make_work_dir
+from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
 
-#: round state up to this many vertices is localCheckpointed, above it
-#: snapshotted to parquet
+#: up to this many vertices the round's state joins are hinted broadcast and
+#: an ephemeral run holds its rounds as local checkpoints; above it every
+#: round is a parquet snapshot
 LOCAL_STATE_MAX_VERTICES = 2_000_000
 
 
@@ -91,11 +94,9 @@ def jones_plassmann(
     round's colored set is checkpointed with a manifest keyed on the input
     fingerprint + seed, and a restarted call resumes mid-coloring — safe
     because JP with a static (md5, id) priority is a fixed program: the
-    remaining rounds depend only on the colored-set state. The convergence
-    count rides the checkpoint write via observe() (free every round, vs the
-    every-2nd-round count job on the ephemeral path).
+    remaining rounds depend only on the colored-set state. In every mode the
+    colored count rides the round's checkpoint write via observe().
     """
-    work_dir = make_work_dir("pgs_color_")
     verts = (
         symmetrize(undirected_edges)
         .select(F.col("src").alias("id"))
@@ -109,7 +110,8 @@ def jones_plassmann(
         .join(verts.select(F.col("id").alias("dst"), F.col("p").alias("pd")), "dst")
         .persist()
     )
-    hi = None
+    hi = cp = None
+    durable = checkpoint_dir is not None
     default_p = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         n = verts.count()
@@ -123,42 +125,23 @@ def jones_plassmann(
         round_p = max(8, min(int(default_p), m // 250_000 + 8))
 
         use_local = n <= LOCAL_STATE_MAX_VERTICES
-
-        def _snap(df: DataFrame, name: str) -> DataFrame:
-            if use_local:
-                # coalesce first: union(prev_checkpoint, new) concatenates
-                # partition lists, so uncoalesced round state grows by ~|parts|
-                # partitions per round — O(rounds²) tasks by convergence
-                return df.coalesce(round_p).localCheckpoint(eager=True)
-            return snapshot(df, work_dir, name)
-
+        local = use_local and not durable  # rounds as local checkpoints
         limit = fixed_rounds if fixed_rounds is not None else max_rounds
-        cp = None
-        start_round = 0
-        n_colored = 0
+        cp = CheckpointManager(
+            spark,
+            checkpoint_dir if durable else make_work_dir("pgs_color_"),
+            f"{fingerprint_edges(undirected_edges)}|seed={seed}" if durable else "",
+        )
+        start_round = n_colored = 0
         resumed_converged = False
-        if checkpoint_dir is not None:
-            from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
-
-            cp = CheckpointManager(
-                spark,
-                checkpoint_dir,
-                f"{fingerprint_edges(undirected_edges)}|seed={seed}",
-            )
-            rp = cp.resume_point()
-            if rp is None:
-                cp.clear()  # stale state from a different input/seed — never mix
-                colored = None
-            else:
-                start_round, colored, m = rp
-                n_colored = int(m.get("n_colored", 0))
-                resumed_converged = bool(m.get("converged", False))
-        else:
-            colored = None
-        if colored is None:
-            # empty and local: no snapshot, which in localCheckpoint mode
-            # would be a cached RDD outliving a durable run
+        rp = cp.resume_point() if durable else None
+        if rp is None:
+            cp.clear()  # stale state from a different input/seed — never mix
             colored = spark.createDataFrame([], "id long, color long")
+        else:
+            start_round, colored, meta = rp
+            n_colored = int(meta.get("n_colored", 0))
+            resumed_converged = bool(meta.get("converged", False))
         history: list[dict] = []
         rounds = start_round
         # NOTE: this mutates the SESSION-global shuffle width for the duration of
@@ -171,12 +154,11 @@ def jones_plassmann(
         for r in range(start_round + 1, limit + 1):
             if resumed_converged:
                 break
-            # Round state (colored, and everything derived from it) is a
-            # localCheckpointed LogicalRDD with NO size statistics — the
-            # planner estimates it at defaultSizeInBytes and plans every
-            # state join as SortMergeJoin (Exchange + Sort over the edge
-            # relation EVERY round, measured in the round plan). Under the
-            # same small-graph threshold that picks localCheckpoint state,
+            # A localCheckpointed colored set keeps its plan's size estimate,
+            # not the data's — the planner sees a join-sized relation and
+            # plans every state join as SortMergeJoin (Exchange + Sort over
+            # the edge relation EVERY round, measured in the round plan).
+            # Under the same small-graph threshold that picks local state,
             # hint the ≤|V|-row sides broadcast; at cluster scale (parquet
             # state) the joins keep their shuffle plans.
             _b = F.broadcast if use_local else (lambda df: df)
@@ -216,56 +198,34 @@ def jones_plassmann(
             new = ready.join(_b(used_sets), "id", "left").select(
                 "id", mex.alias("color")
             )
-            if cp is not None:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                observed = colored.union(new).observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                )
-                holder = {}
-
-                def _mfn(obs=obs, holder=holder):
-                    n_c = int(obs.get["n"] or 0)
-                    holder["n"] = n_c
-                    return {"n_colored": n_c, "converged": n_c >= n}
-
-                colored = cp.save(observed, r, metrics_fn=_mfn, lineage=False)
-                cp.prune(keep_last=2)
-                n_colored = holder["n"]
-                hi.unpersist()
-                rounds = r
-                history.append({"round": r, "colored": n_colored})
-                if fixed_rounds is None and n_colored >= n:
-                    break
-                continue
-            if fixed_rounds is None:
-                # convergence rides the round's OWN materialization through
-                # observe() (works for localCheckpoint and parquet snapshots
-                # alike) — zero extra jobs, vs the every-2nd-round count job
-                # this replaces; exact same colors, convergence now detected
-                # the round it happens. Skipped in fixed-round (oracle) mode,
-                # where the round count is the program.
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                colored = _snap(
-                    colored.union(new).observe(obs, F.count(F.lit(1)).alias("n")),
-                    f"colored_{r % 2}",
-                )
-                hi.unpersist()
-                rounds = r
-                n_colored = int(obs.get["n"] or 0)
-                history.append({"round": r, "colored": n_colored})
-                if n_colored >= n:
-                    break
-            else:
-                colored = _snap(colored.union(new), f"colored_{r % 2}")
-                hi.unpersist()
-                rounds = r
-        if fixed_rounds is not None:
-            n_colored = colored.count()
+            nxt = colored.union(new)
+            if local:
+                # coalesce first: union(prev_checkpoint, new) concatenates
+                # partition lists, so uncoalesced round state grows by ~|parts|
+                # partitions per round — O(rounds²) tasks by convergence
+                nxt = nxt.coalesce(round_p)
+            # the colored count rides the round's own materialization
+            obs = Observation()
+            counted = lambda: int(obs.get["n"] or 0)  # noqa: E731
+            colored = cp.save(
+                nxt.observe(obs, F.count(F.lit(1)).alias("n")), r, lineage=False,
+                metrics_fn=lambda: {"n_colored": counted(), "converged": counted() >= n},
+                local=local and r < limit,
+            )
+            cp.prune(keep_last=2)
+            hi.unpersist()
+            rounds, n_colored = r, counted()
+            history.append({"round": r, "colored": n_colored})
+            # in fixed-round (oracle) mode the round count is the program
+            if fixed_rounds is None and n_colored >= n:
+                break
         converged = n_colored >= n
+        if local and 0 < rounds < limit:
+            # the last round is a local checkpoint: the run's one parquet result
+            colored = cp.save(
+                colored, rounds, {"n_colored": n_colored, "converged": converged},
+                lineage=False,
+            )
         out = colored
         if not converged:
             out = verts.select("id").join(colored, "id", "left").select(
@@ -274,6 +234,8 @@ def jones_plassmann(
         return ColoringResult(out, rounds, converged, history)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", default_p)
+        if cp is not None:
+            cp.release()
         for df in (verts, sym_p, hi):
             if df is not None:
                 df.unpersist()

@@ -24,12 +24,22 @@ Spark plan per superstep (THREE jobs: two exchanges and the snapshot write):
              the per-edge contributions are summed, each vertex's own state
              row carries its old rank and its dangling flag through)
              → (1-α)/N + α·(Σcontrib + dangling_mass/N)
-  write    = (id, rank, dangling) → parquet snapshot, with delta and the
-             next superstep's dangling mass collected by DataFrame.observe()
-             on the write job itself.
+  write    = (id, rank, dangling) → the step's checkpoint, with delta and
+             the next superstep's dangling mass collected by
+             DataFrame.observe() on the write job itself.
 
 State per superstep is |V| rows — tiny relative to |E| — so checkpointing every
-iteration is cheap and gives both flat lineage and mid-convergence resume.
+iteration is cheap and keeps the lineage flat. A durable run
+(``checkpoint_dir``) writes each step as a parquet snapshot with a manifest,
+so it resumes mid-convergence. An ephemeral run never resumes: up to
+``LOCAL_MAX_ROWS`` vertices its steps are DISK_ONLY local checkpoints
+(``CheckpointManager.save(local=True)``: no parquet write, commit or re-read
+per superstep), of which the two newest are held, and only its result goes
+to parquet — the last step of a ``fixed_iterations``/``max_iter`` run
+directly, a converged state in one write after the loop. Larger ephemeral
+states are parquet snapshots, which read back columnar and faster. The state
+join is hinted ``shuffle_hash``, so the local checkpoint's plan-derived size
+estimate never picks a join strategy.
 
 Opt-in λ-extrapolation (``extrapolate=True``) grafts TangencyPack's
 accelerated superstep solver (commons/TangencyPack.java:248-296: snapshot two
@@ -46,7 +56,6 @@ within the tolerance (allclose-tested).
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -54,7 +63,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pgs_spark.operators.state import make_work_dir
-from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
+from pgs_spark.streaming.checkpoint import (
+    LOCAL_MAX_ROWS,
+    CheckpointManager,
+    fingerprint_edges,
+)
 
 
 @dataclass
@@ -226,9 +239,12 @@ def pagerank(
             w_edges.unpersist()
             w_edges = salted_edges
 
-        # Superstep state ALWAYS snapshots to parquet: |V| rows is cheap,
-        # lineage stays flat, and the state lives off-heap (OS page cache)
-        # instead of as on-heap RDD blocks unpersist() cannot free promptly.
+        # Superstep state is a parquet snapshot per step in a durable run or
+        # above LOCAL_MAX_ROWS vertices, and a DISK_ONLY local checkpoint
+        # otherwise — both off-heap, both with flat lineage — whose last
+        # possible step (or converged state, after the loop) is the run's one
+        # parquet result.
+        local_steps = not durable and n <= LOCAL_MAX_ROWS
         start_iter = 0
         state = vtab.select("id", F.lit(1.0 / n).alias("rank"), "dangling")
         d_mass = float(st["nd"]) / n  # all ranks equal at iter 0 → analytic
@@ -332,7 +348,10 @@ def pagerank(
                 )
                 return metrics
 
-            new_state = cp.save(observed, it + 1, lineage=False, metrics_fn=_metrics)
+            local = local_steps and it + 1 < limit
+            new_state = cp.save(
+                observed, it + 1, lineage=False, metrics_fn=_metrics, local=local
+            )
             delta, d_mass = metrics["delta"], metrics["dangling_mass"]
             history.append(metrics)
 
@@ -379,15 +398,16 @@ def pagerank(
                         )
                         return metrics
 
-                    plain_path = getattr(new_state, "_pgs_snapshot_path", None)
+                    plain = new_state
                     new_state = cp.save(
-                        ext_observed, it + 1, lineage=False, suffix="x", metrics_fn=_jumped
+                        ext_observed, it + 1, lineage=False, suffix="x",
+                        metrics_fn=_jumped, local=local,
                     )
                     d_mass = metrics["dangling_mass"]
-                    if plain_path:
-                        # the plain snapshot fed the jump and its manifest was
-                        # superseded — drop it so prune() bookkeeping stays exact
-                        shutil.rmtree(plain_path, ignore_errors=True)
+                    # the plain step fed the jump and is superseded by it (a
+                    # snapshot's manifest too) — free it so prune() keeps the
+                    # pre-jump state and the jump
+                    cp.drop(plain)
                     ext_pending_delta = delta
 
             cp.prune(keep_last=2)
@@ -399,12 +419,16 @@ def pagerank(
                 break
         else:
             iterations = start_iter if limit <= start_iter else limit
+        if local_steps and iterations < limit:
+            # converged on a local checkpoint: the run's one parquet result
+            state = cp.save(state, iterations, history[-1], lineage=False)
     finally:
+        cp.release()
         for df in cached:
             df.unpersist()
     if fixed_iterations is not None:
         converged = True
     # NOTE: with an ephemeral temp dir the returned DataFrame reads from that
-    # dir's final snapshot — it is pruned to the last two snapshots and left
-    # on disk (removing it would invalidate the returned DataFrame).
+    # dir's one result snapshot, left on disk (removing it would invalidate
+    # the returned DataFrame) and reclaimed at interpreter exit.
     return PageRankResult(state.select("id", "rank"), iterations, converged, history)

@@ -1,12 +1,22 @@
 """Off-heap iteration state and the superstep runner for driver-side loops.
 
 Every iterative operator in this engine carries per-superstep state. Keeping
-that state as localCheckpoint'ed RDD blocks leaves every superstep's rows
-*deserialized on the JVM heap* — blocks that unpersist() cannot free
-promptly; at 20M vertices that produced 19 Full GCs with multi-second pauses
-(see BENCH/BASELINE.md history). Writing state to parquet and re-reading it
-keeps the working set in the OS page cache (off-heap), truncates lineage,
-and — with a manifest — survives a driver restart.
+that state as localCheckpoint'ed RDD blocks at the default storage level
+leaves every superstep's rows *deserialized on the JVM heap* — blocks that
+unpersist() cannot free promptly; at 20M vertices that produced 19 Full GCs
+with multi-second pauses (see BENCH/BASELINE.md history). Writing state to
+parquet and re-reading it keeps the working set in the OS page cache
+(off-heap), truncates lineage, and — with a manifest — survives a driver
+restart. A ``DISK_ONLY`` local checkpoint
+(``CheckpointManager.save(local=True)``) is off-heap too, serialized to
+``spark.local.dir``, and skips the parquet write, commit and re-read;
+PageRank and Jones-Plassmann use it for runs that never resume, on small
+state (its row blocks read back slower than columnar parquet at millions of
+rows: ``checkpoint.LOCAL_MAX_ROWS``). The runner stays on parquet: a local
+checkpoint keeps the un-materialized plan's size estimate, not the data's
+(9.2e18 bytes, the planner's default, for a 50-row aggregate over an
+in-memory table whose parquet re-read reports 969), so AQE stops
+broadcasting LPA's labels.
 
 ``run_supersteps`` is the one superstep loop — the "compute all, then flip"
 barrier of the reference's mesh smoothing (commons/PMesh.java:237-270) as an

@@ -12,6 +12,18 @@ Writing state back out and reading it in ALSO truncates lineage, which keeps
 the per-superstep plan flat instead of growing with iteration count — the
 two-phase "compute all, then flip" barrier of PMesh.smoothScaled
 (commons/PMesh.java:237-270) expressed as an immutable snapshot swap.
+
+A run that never resumes can materialize a step as a LOCAL checkpoint
+instead (``save(..., local=True)``): ``localCheckpoint`` at ``DISK_ONLY``,
+serialized blocks in ``spark.local.dir`` — off-heap like the parquet page
+cache, with no file commit, listing or re-read. It writes no parquet and no
+manifest; ``prune`` and ``release`` free the superseded checkpoints, and the
+run's result still goes out as one parquet snapshot, since the blocks die
+with the checkpoint. A local checkpoint keeps the un-materialized plan's size
+estimate, not the data's, so only loops whose joins do not depend on size
+statistics use it (PageRank's state join is hinted ``shuffle_hash``). Its
+blocks are rows through the session serializer, where parquet is columnar,
+so it pays only up to ``LOCAL_MAX_ROWS``.
 """
 
 from __future__ import annotations
@@ -22,8 +34,17 @@ import shutil
 import tempfile
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: State up to this many rows may be held as local checkpoints. Measured in
+#: one JVM on a 4-core host, (id, rank, dangling) state: the aggregate that
+#: makes it plus its write, then the two reads a PageRank superstep makes
+#: (all columns, then id and rank), medians of 3, local vs parquet: 250k rows
+#: 0.78 + 0.43 s vs 0.97 + 0.42 s; 1M rows 2.61 + 0.57 vs 2.59 + 0.45; 2M
+#: rows 5.00 + 0.81 vs 4.60 + 0.42.
+LOCAL_MAX_ROWS = 500_000
 
 
 class CheckpointManager:
@@ -33,6 +54,7 @@ class CheckpointManager:
         self.spark = spark
         self.dir = directory
         self.fingerprint = input_fingerprint
+        self._local: list[DataFrame] = []  # held local checkpoints, oldest first
         os.makedirs(directory, exist_ok=True)
 
     # -- write ---------------------------------------------------------------
@@ -44,6 +66,7 @@ class CheckpointManager:
         lineage: bool = True,
         suffix: str = "",
         metrics_fn=None,
+        local: bool = False,
     ) -> DataFrame:
         """Persist one superstep's vertex state; returns the re-read DataFrame
         (flat lineage, with its parquet path on `_pgs_snapshot_path`).
@@ -57,7 +80,18 @@ class CheckpointManager:
         the parquet write action — the hook for Observation metrics that ride
         the write job — and its result is merged over `metrics`, so observed
         values land in the same manifest as the partition lineage without a
-        second write_manifest call."""
+        second write_manifest call.
+
+        `local=True` materializes the step as a DISK_ONLY local checkpoint
+        instead: no parquet, no manifest (`metrics_fn` still runs after the
+        action, for its side effects). The checkpoint is held until `prune`,
+        `drop` or `release` frees it."""
+        if local:
+            held = state.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            self._local.append(held)
+            if metrics_fn is not None:
+                metrics_fn()
+            return held
         path = os.path.join(self.dir, f"state_{iteration:05d}{suffix}")
         state.write.mode("overwrite").parquet(path)
         # re-read with the schema we just wrote: skips the per-save driver
@@ -143,7 +177,8 @@ class CheckpointManager:
                 os.remove(full)
 
     def prune(self, keep_last: int = 2) -> None:
-        """Drop all but the newest `keep_last` snapshots (bounded storage)."""
+        """Drop all but the newest `keep_last` snapshots and all but the
+        newest `keep_last` local checkpoints (bounded storage)."""
         manifests = sorted(
             n for n in os.listdir(self.dir) if n.startswith("manifest_")
         )
@@ -152,6 +187,23 @@ class CheckpointManager:
                 m = json.load(f)
             shutil.rmtree(m["path"], ignore_errors=True)
             os.remove(os.path.join(self.dir, name))
+        for held in self._local[:-keep_last] if keep_last else list(self._local):
+            self.drop(held)
+
+    def drop(self, state: DataFrame) -> None:
+        """Free one superseded step: a held local checkpoint's blocks, or a
+        parquet snapshot's files (its manifest is left to the caller)."""
+        if any(held is state for held in self._local):
+            self._local = [held for held in self._local if held is not state]
+            # DataFrame.unpersist() does not reach the checkpointed RDD
+            state._jdf.queryExecution().logical().rdd().unpersist(False)
+        elif getattr(state, "_pgs_snapshot_path", None):
+            shutil.rmtree(state._pgs_snapshot_path, ignore_errors=True)
+
+    def release(self) -> None:
+        """Free every held local checkpoint (a run's `finally`)."""
+        for held in list(self._local):
+            self.drop(held)
 
 
 def fingerprint_edges(edges: DataFrame) -> str:

@@ -320,3 +320,83 @@ def test_personalized_checkpoint_resume_identical(spark, tmp_path):
     ids = sorted(a)
     assert np.allclose([a[i] for i in ids], [b[i] for i in ids], atol=1e-13)
     assert len(resumed.history) == 6
+
+
+@pytest.mark.parametrize("kw", [dict(fixed_iterations=10), dict(tol=1e-9, max_iter=200)])
+def test_ephemeral_matches_durable_and_keeps_one_snapshot(spark, tmp_path, monkeypatch, kw):
+    """An ephemeral run (local-checkpoint supersteps, one parquet result)
+    gives the durable run's ranks, to float-summation order (the bound of
+    the resume tests), and leaves one state snapshot and one manifest in
+    its work dir."""
+    import os
+
+    monkeypatch.setenv("PGS_SPARK_LOCAL_DIR", str(tmp_path))
+    pairs = random_graph(30, 0.12, seed=9, directed=True) + [(0, 100), (1, 101)]
+    e = edges_df(spark, pairs)
+    ephemeral = pagerank(spark, e, **kw)
+    durable = pagerank(spark, e, checkpoint_dir=str(tmp_path / "ck"), **kw)
+
+    assert ephemeral.iterations == durable.iterations and ephemeral.converged
+    a, b = _collect(ephemeral), _collect(durable)
+    assert set(a) == set(b)
+    ids = sorted(a)
+    assert np.allclose([a[i] for i in ids], [b[i] for i in ids], rtol=0, atol=1e-13)
+    (work,) = [d for d in os.listdir(tmp_path) if d.startswith("pgs_pr_")]
+    names = sorted(os.listdir(tmp_path / work))
+    assert [n for n in names if n.startswith("state_")] == [
+        f"state_{ephemeral.iterations:05d}"
+    ], names
+    assert [n for n in names if n.startswith("manifest_")] == [
+        f"manifest_{ephemeral.iterations:05d}.json"
+    ], names
+
+
+def _plan_size(plan):
+    """(node count, constraint count) of a logical plan."""
+    children = plan.children()
+    nodes = 1 + sum(_plan_size(children.apply(i))[0] for i in range(children.size()))
+    return nodes, plan.constraints().size()
+
+
+def test_local_checkpoint_chain_keeps_plan_flat(spark, monkeypatch):
+    """Chained local checkpoints must not carry their history forward: a
+    chain whose plans grew per step walked into a cliff elsewhere (0.7 s to
+    113 s by step 23). The optimized plan a superstep writes, which reads
+    the previous step's checkpoint, is the same size at step 5 and step 40."""
+    from pgs_spark.streaming.checkpoint import CheckpointManager
+
+    sizes = {}
+    orig = CheckpointManager.save
+
+    def sized_save(self, state, iteration, *args, **kwargs):
+        sizes[iteration] = _plan_size(state._jdf.queryExecution().optimizedPlan())
+        return orig(self, state, iteration, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointManager, "save", sized_save)
+    e = edges_df(spark, random_graph(30, 0.12, seed=9, directed=True))
+    assert pagerank(spark, e, fixed_iterations=40).iterations == 40
+    assert sizes[5] == sizes[40], (sizes[5], sizes[40])
+
+
+def test_large_state_steps_stay_on_parquet(spark, monkeypatch):
+    """Above LOCAL_MAX_ROWS vertices an ephemeral run snapshots every step
+    to parquet (columnar reads beat serialized row blocks there) and gives
+    the same ranks."""
+    import pgs_spark.operators.pagerank as pr
+    from pgs_spark.streaming.checkpoint import CheckpointManager
+
+    e = edges_df(spark, random_graph(30, 0.12, seed=9, directed=True))
+    small = _collect(pagerank(spark, e, fixed_iterations=4))
+    modes = []
+    orig = CheckpointManager.save
+
+    def noted_save(self, state, iteration, *args, **kwargs):
+        modes.append(kwargs.get("local", False))
+        return orig(self, state, iteration, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointManager, "save", noted_save)
+    monkeypatch.setattr(pr, "LOCAL_MAX_ROWS", 10)
+    large = _collect(pagerank(spark, e, fixed_iterations=4))
+    assert modes == [False] * 4
+    ids = sorted(small)
+    assert np.allclose([small[i] for i in ids], [large[i] for i in ids], rtol=0, atol=1e-13)

@@ -60,9 +60,10 @@ def _circles(e):
     )
 
 
-# superstep loops (on state.run_supersteps, PageRank's and the durable
-# coloring's own), each run on an 8-vertex path (every loop gets past step 2
-# on it); `d` is a fresh directory for the durable rows
+# superstep loops (on state.run_supersteps, PageRank's and the coloring's
+# own, whose ephemeral runs hold local checkpoints), each run on an 8-vertex
+# path (every loop gets past step 2 on it); `d` is a fresh directory for the
+# durable rows
 SUPERSTEP_OPS = {
     "lpa": lambda spark, e, d: label_propagation(spark, e, max_iter=5).labels,
     "bfs": lambda spark, e, d: bfs_distances(spark, e, 0, max_hops=6),
@@ -73,11 +74,16 @@ SUPERSTEP_OPS = {
     ).assignments,
     "hyperball": lambda spark, e, d: hyperball(spark, e, supersteps=3),
     "pagerank": lambda spark, e, d: pagerank(spark, e, fixed_iterations=4).ranks,
+    "pagerank_tol": lambda spark, e, d: pagerank(spark, e, tol=1e-6).ranks,
+    "pagerank_extrapolate": lambda spark, e, d: pagerank(
+        spark, e, tol=1e-9, extrapolate=True
+    ).ranks,
     "merge_to_k": lambda spark, e, d: merge_to_k(spark, e, k=1, fixed_rounds=3).groups,
     "fr_layout": lambda spark, e, d: fr_layout(spark, e, iterations=3).positions,
     "circle_pack": lambda spark, e, d: repulsion_circle_pack(
         spark, _circles(e), iterations=3
     ).positions,
+    "jones_plassmann": lambda spark, e, d: jones_plassmann(spark, e).colors,
     "jones_plassmann_durable": lambda spark, e, d: jones_plassmann(
         spark, e, checkpoint_dir=d
     ).colors,
